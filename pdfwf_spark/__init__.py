@@ -27,9 +27,9 @@ e.g. ``pymupdf.py:63`` vs ``pypdf.py:68-70``).
 
 Spark-side structure (see ``pdfwf_spark.pipeline``): Iceberg/parquet
 scan → anti-join against committed lineage (resume) → salted
-repartition → sortWithinPartitions → mapInPandas(sniff→route→parse) →
-stable ordering window over (conv_id, turn_idx, ts) → data + lineage
-write.
+repartition (only when the scan splits are too few) →
+mapInArrow(sniff→route→parse) → stable ordering window over
+(conv_id, turn_idx, ts) → data + lineage write.
 """
 
 __version__ = "0.1.0"

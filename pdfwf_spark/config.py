@@ -5,9 +5,9 @@ pydantic model (`python -m pdfwf.convert --config cfg.yaml`;
 reference pdfwf/convert.py:185-224 WorkflowSettings,
 pdfwf/utils.py:30-89 BaseSettings.from_yaml). The engine mirrors
 that surface with a stdlib dataclass + PyYAML: every field of
-ExtractConfig is a CLI flag of jobs/run_extract.py, and explicit CLI
-flags override YAML values (the same precedence pydantic-settings
-gives).
+ExtractConfig except `prepartition` (YAML only) is a CLI flag of
+jobs/run_extract.py, and explicit CLI flags override YAML values (the
+same precedence pydantic-settings gives).
 
     # extract.yaml
     input: /data/transcripts          # table name or parquet path

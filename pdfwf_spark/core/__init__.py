@@ -1,7 +1,7 @@
 """Pure-Python extraction core.
 
-Shared by the golden-fixture generator (tests) and the Spark pandas
-UDFs (pdfwf_spark.operators.extract) so both sides run exactly one
+Shared by the golden-fixture generator (tests) and the Spark Arrow
+kernel (pdfwf_spark.operators.extract) so both sides run exactly one
 normalization code path.
 """
 

@@ -117,15 +117,6 @@ def _frame_marker(tag: str, classes: tuple[str, ...]) -> int:
     return 0
 
 
-def _nearest_marker(stack: list[_Frame]) -> int:
-    """Innermost decisive ancestor wins (nav inside article -> boiler;
-    article inside nav -> content)."""
-    for frame in reversed(stack):
-        if frame.marker != 0:
-            return frame.marker
-    return 0
-
-
 def extract_html(payload: str) -> tuple[str, list[tuple[int, int, str]], dict[str, str]]:
     """Strip boilerplate. Returns (clean_text, spans, meta).
 

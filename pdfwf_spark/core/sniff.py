@@ -2,7 +2,7 @@
 STRATEGIES registry (pdfwf/parsers/__init__.py:34-58), which selects a
 parser by *name* from config. Here the per-turn payload itself selects
 the extractor by magic-prefix / tag-density sniffing, so a single
-mapInPandas pass handles the full mixed corpus.
+mapInArrow pass handles the full mixed corpus.
 
 Labels: 'pdfish' | 'html' | 'plain' | 'empty'.
 """

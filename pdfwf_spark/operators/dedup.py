@@ -20,12 +20,8 @@ compares lexicographically == numerically).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-logger = logging.getLogger(__name__)
 
 SIMHASH_BITS = 16
 
@@ -107,35 +103,6 @@ def cap_hot_groups(
             ),
         )
     raise ValueError(f"cap_hot_groups mode must be 'drop' or 'salt', got {mode!r}")
-
-
-def hot_group_report(
-    exploded: DataFrame, keys: list[str], cap: int
-) -> DataFrame:
-    """The groups `cap_hot_groups` would drop, with sizes — lazy; for
-    drop-rate monitoring next to the capped join."""
-    return (
-        exploded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("group_size"))
-        .filter(F.col("group_size") > cap)
-    )
-
-
-def _log_drops(exploded: DataFrame, keys: list[str], cap: int | None,
-               op: str) -> None:
-    """Count + log the dropped hot groups (one cheap aggregate job).
-    Opt-in: triggers an action, so it is never run implicitly."""
-    if cap is None:
-        return
-    report = hot_group_report(exploded, keys, cap)
-    dropped = report.agg(
-        F.count(F.lit(1)).alias("groups"),
-        F.coalesce(F.sum("group_size"), F.lit(0)).alias("rows"),
-    ).collect()[0]
-    logger.warning(
-        "%s: hot-bucket cap %d dropped %d groups (%d exploded rows)",
-        op, cap, dropped["groups"], dropped["rows"],
-    )
 
 
 def _pair_counts(pairs: DataFrame) -> DataFrame:
@@ -275,7 +242,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     rows_per_band: int = 2,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    log_drops: bool = False,
     cap_mode: str = "drop",
 ) -> DataFrame:
     """Docs sharing >=1 band bucket (banding: P(candidate) rises
@@ -305,9 +271,6 @@ def lsh_candidate_pairs(
     exploded = sigs.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
     ).select(id_col, "bb.band", "bb.bucket")
-    if log_drops:
-        _log_drops(exploded, ["band", "bucket"], max_bucket_size,
-                   "lsh_candidate_pairs")
     exploded = cap_hot_groups(
         exploded, ["band", "bucket"], max_bucket_size,
         mode=cap_mode, salt_key=id_col,
@@ -350,7 +313,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.05,
     max_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    log_drops: bool = False,
 ) -> DataFrame:
     """Exact word-shingle Jaccard for all co-shingled pairs.
 
@@ -365,8 +327,6 @@ def ngram_jaccard_pairs(
     the DuckDB oracle hash-matches without float drift).
     """
     sh = exploded_shingles(docs, text_col, id_col, shingle_n)
-    if log_drops:
-        _log_drops(sh, ["sh"], max_df, "ngram_jaccard_pairs")
     # (r6 note: checkpointing this table was A/B'd and reverted — the
     # recomputed shingle passes cost about what the materialization
     # does, and corpus-row-sized checkpoint blocks pressure the shared
@@ -520,7 +480,6 @@ def simhash_band_pairs(
     bits: int = 64,
     n_bands: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    log_drops: bool = False,
     cap_mode: str = "drop",
 ) -> DataFrame:
     """Near-dup candidates by banded Hamming grouping over a banded
@@ -554,9 +513,6 @@ def simhash_band_pairs(
     exploded = sigs.select(
         F.col(id_col), F.explode(entries).alias("e")
     ).select(id_col, "e.band_idx", "e.band_val")
-    if log_drops:
-        _log_drops(exploded, ["band_idx", "band_val"], max_bucket_size,
-                   "simhash_band_pairs")
     exploded = cap_hot_groups(
         exploded, ["band_idx", "band_val"], max_bucket_size,
         mode=cap_mode, salt_key=id_col,
@@ -1114,7 +1070,6 @@ def shared_passage_pairs(
     shingle_n: int = 8,
     min_shared: int = 2,
     max_df: int | None = DEFAULT_MAX_PASSAGE_DF,
-    log_drops: bool = False,
 ) -> DataFrame:
     """Near-verbatim passage borrowing: doc pairs sharing >= min_shared
     distinct word 8-grams — the bounded cousin of suffix-array exact
@@ -1134,8 +1089,6 @@ def shared_passage_pairs(
     Output: (id_a, id_b, n_shared long).
     """
     sh = exploded_shingles(docs, text_col, id_col, shingle_n)
-    if log_drops:
-        _log_drops(sh, ["sh"], max_df, "shared_passage_pairs")
     sh = cap_hot_groups(sh, ["sh"], max_df)
     a, b = sh.alias("a"), sh.alias("b")
     return (

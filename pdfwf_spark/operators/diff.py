@@ -133,19 +133,3 @@ def merge_upsert(
         .filter((F.col("_rn") == 1) & ~F.col("_del"))
         .select(*out_cols)
     )
-
-
-def diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: Sequence[str] | str,
-    compare_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """One row per change kind with its count — the run-report form.
-    Same single-join plan; the aggregation is a tiny hash agg on top.
-    """
-    return (
-        snapshot_diff(old, new, key_cols, compare_cols)
-        .groupBy("change")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )

@@ -1,4 +1,4 @@
-"""The extraction operator: one mapInPandas pass over Arrow batches.
+"""The extraction operator: one mapInArrow pass over Arrow batches.
 
 This is the Spark re-expression of the reference's entire worker loop
 (reference convert.py:36-74 parse_pdfs: warm parser -> parse batch ->
@@ -21,10 +21,6 @@ state machines (pdfwf_spark.core).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,102 +72,26 @@ def tie_key_col(text: str = "text", tool: str = "tool") -> Column:
     )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """pandas twin of _extract_batches_arrow — kept for tests/callers
-    that exercise the mapInPandas path; the pipeline uses the Arrow
-    variant below (same per-row results, cheaper serialization)."""
-    import time
-
-    extract_payload = _warm_parser()
-    # init cost is reported exactly once per worker process: on the
-    # first row of the first batch this generator instance emits,
-    # IF no earlier task in this process already reported it
-    global _INIT_US
-    init_to_report, _INIT_US = (_INIT_US or 0), 0
-
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        t0 = time.monotonic_ns()
-        texts = pdf["text"].fillna("").tolist()
-        tools = pdf["tool"].fillna("").tolist()
-        parser = [""] * n
-        status = [""] * n
-        reason = [""] * n
-        source = [""] * n
-        clean = [""] * n
-        spans: list[list[dict]] = [[] for _ in range(n)]
-        meta: list[dict] = [{} for _ in range(n)]
-        bytes_in = [0] * n
-        bytes_out = [0] * n
-        init_us = [0] * n
-        if init_to_report:
-            init_us[0], init_to_report = init_to_report, 0
-        for i in range(n):
-            res = extract_payload(texts[i], tools[i])
-            parser[i] = res.parser
-            status[i] = res.status
-            reason[i] = res.reason
-            source[i] = res.source
-            clean[i] = res.clean_text
-            spans[i] = [
-                {"start": s.start, "end": s.end, "label": s.label} for s in res.spans
-            ]
-            meta[i] = res.meta
-            bytes_in[i] = len(texts[i]) + len(tools[i])
-            bytes_out[i] = len(res.clean_text)
-        # per-row share of the batch's parse wall time ('parser-parse'
-        # stage, timer.py:36-129); summed per bucket in lineage_rows
-        extract_us = (time.monotonic_ns() - t0) // (n * 1000)
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].values,
-                "role": pdf["role"].values,
-                "ts": pdf["ts"].values,
-                "parser": parser,
-                "parse_status": status,
-                "fail_reason": reason,
-                "source_col": source,
-                "clean_text": clean,
-                "spans": spans,
-                "meta": meta,
-                "bytes_in": bytes_in,
-                "bytes_out": bytes_out,
-                "extract_us": [extract_us] * n,
-                "init_us": init_us,
-                "bucket": pdf["bucket"].values,
-                # computed JVM-side pre-UDF (tie_key_col); pass-through
-                "tie_key": pdf["tie_key"].values,
-            }
-        )
-
-    # a task fed only empty batches never attached the init cost to a
-    # row — put it back so a later task in this worker process reports
-    # it instead of dropping the initialize-parser wall from lineage
-    if init_to_report:
-        _INIT_US += init_to_report
-
-
 def _extract_batches_arrow(batches):
-    """Arrow-native extraction kernel (r6, guide §4.1/§4.2): the
-    mapInPandas path spent ~5x the parse wall converting batches
+    """Arrow-native extraction kernel (r6, guide §4.1/§4.2). A pandas
+    round trip would spend ~5x the parse wall converting batches
     JVM->Arrow->pandas->Arrow->JVM — object columns (spans list-of-
     struct, meta map) walk Python elements on BOTH conversions, and
     the six passthrough columns (conv_id/turn_idx/role/ts/bucket/
-    tie_key) paid it for nothing. mapInArrow hands the RecordBatch
-    straight through: passthrough columns are REUSED untouched
-    (zero-copy, types preserved exactly), only text/tool are
+    tie_key) would pay it for nothing. mapInArrow hands the
+    RecordBatch straight through: passthrough columns are REUSED
+    untouched (zero-copy, types preserved exactly), only text/tool are
     materialized to Python, and output columns are built once with
-    pa.array at the exact Arrow types of EXTRACTED_SCHEMA. Per-row
-    parse results are byte-identical to _extract_batches (same
-    extract_payload loop)."""
+    pa.array at the exact Arrow types of EXTRACTED_SCHEMA. Each row is
+    extract_payload(text or "", tool or "")."""
     import time
 
     import pyarrow as pa
 
     extract_payload = _warm_parser()
+    # init cost is reported exactly once per worker process: on the
+    # first row of the first batch this generator instance emits,
+    # IF no earlier task in this process already reported it
     global _INIT_US
     init_to_report, _INIT_US = (_INIT_US or 0), 0
 
@@ -221,6 +141,8 @@ def _extract_batches_arrow(batches):
             meta[i] = res.meta
             bytes_in[i] = len(t) + len(u)
             bytes_out[i] = len(res.clean_text)
+        # per-row share of the batch's parse wall time ('parser-parse'
+        # stage, timer.py:36-129); summed per bucket in lineage_rows
         extract_us = (time.monotonic_ns() - t0) // (n * 1000)
         yield pa.RecordBatch.from_arrays(
             [
@@ -250,6 +172,9 @@ def _extract_batches_arrow(batches):
             ],
         )
 
+    # a task fed only empty batches never attached the init cost to a
+    # row — put it back so a later task in this worker process reports
+    # it instead of dropping the initialize-parser wall from lineage
     if init_to_report:
         _INIT_US += init_to_report
 

@@ -305,7 +305,7 @@ def decode_media(
     return media.select(id_col, blob_col).mapInPandas(run, MEDIA_META_SCHEMA)
 
 
-# --- round-4 ops: features / resize / frame-sample -----------------------
+# --- round-4 ops: features / frame-sample --------------------------------
 
 VID_MAGIC = b"FAKEVID"  # + n_frames:4BE + frame_size:4BE + frames
 
@@ -445,105 +445,6 @@ def media_features(
             yield (fake_batch if fake else real_batch)(ids, blobs)
 
     return media.select(id_col, blob_col).mapInPandas(run, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "doc_id",
-    blob_col: str = "content",
-    fake: bool = False,
-    strict: bool = False,
-) -> DataFrame:
-    """Nearest-neighbor image resize, emitting a VALID blob of the
-    same format (FAKEIMG or 24bpp BMP with correct row padding) —
-    decode_media on the output reports the new dimensions, which is
-    how the test closes the loop. Non-image blobs pass through as
-    NULL content (or raise under strict=True — PIL-grade resampling
-    is genuinely absent here, same stub contract as the codecs).
-    The gather is one numpy fancy-index per image; no per-pixel
-    Python."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"target dims must be positive, got {out_w}x{out_h}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out_blobs: list[bytes | None] = []
-            ws: list[int | None] = []
-            hs: list[int | None] = []
-            for i, raw in enumerate(pdf[blob_col]):
-                b = bytes(raw) if raw is not None else b""
-                if fake and b[:7] == IMG_MAGIC:
-                    w, h = struct.unpack_from(">II", b, 7)
-                    px = np.frombuffer(b, dtype=np.uint8, offset=15)[: w * h]
-                    img = px.reshape(h, w)
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    res = img[np.ix_(yi, xi)]
-                    out_blobs.append(
-                        IMG_MAGIC + struct.pack(">II", out_w, out_h) + res.tobytes()
-                    )
-                    ws.append(out_w); hs.append(out_h)
-                elif (
-                    not fake and b[:2] == b"BM" and len(b) >= 30
-                    # the row-stride math below is 24bpp-specific; any
-                    # other depth must fall to the stub path, not
-                    # silently mis-slice pixel rows
-                    and struct.unpack_from("<H", b, 28)[0] == 24
-                ):
-                    off = struct.unpack_from("<I", b, 10)[0]
-                    w, h = struct.unpack_from("<ii", b, 18)
-                    h = abs(h)
-                    stride = ((3 * w + 3) // 4) * 4
-                    px = np.frombuffer(b, dtype=np.uint8, offset=off)
-                    px = px[: stride * h].reshape(h, stride)[:, : 3 * w]
-                    img = px.reshape(h, w, 3)
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    res = img[np.ix_(yi, xi)]
-                    out_stride = ((3 * out_w + 3) // 4) * 4
-                    rows = np.zeros((out_h, out_stride), dtype=np.uint8)
-                    rows[:, : 3 * out_w] = res.reshape(out_h, 3 * out_w)
-                    body = rows.tobytes()
-                    hdr = (
-                        struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-                        + struct.pack(
-                            "<IiiHHIIiiII",
-                            40, out_w, out_h, 1, 24, 0, len(body), 0, 0, 0, 0,
-                        )
-                    )
-                    out_blobs.append(hdr + body)
-                    ws.append(out_w); hs.append(out_h)
-                else:
-                    if strict:
-                        raise NotImplementedError(
-                            f"no resampler for non-image payload "
-                            f"(doc_id={ids[i]}); this build resizes "
-                            "FAKEIMG and 24bpp BMP only"
-                        )
-                    out_blobs.append(None); ws.append(None); hs.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "content": out_blobs,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                }
-            )
-
-    return media.select(id_col, blob_col).mapInPandas(run, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = T.StructType(

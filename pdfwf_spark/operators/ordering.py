@@ -43,15 +43,13 @@ def with_turn_rank(df: DataFrame) -> DataFrame:
 
 
 def sort_for_extraction(df: DataFrame) -> DataFrame:
-    """OPTIONAL deterministic intra-partition order before the UDF
-    (the analog of the reference's shuffle=False DataLoaders,
-    nougat_.py:181).
+    """Deterministic intra-partition order before the UDF (the analog
+    of the reference's shuffle=False DataLoaders, nougat_.py:181).
 
-    Not on the default path: extraction is per-row and the output
+    Used by the streaming micro-batch path (streaming/ingest.py) only.
+    The batch path skips it: extraction is per-row and the output
     order contract is enforced by the with_turn_rank window, so this
     sort buys only batch locality while costing a full JVM sort of
     raw payload bytes per partition (measured ~10 cores of JVM time
-    at local[32] on a 1M-turn corpus). Enable via
-    extract_df(stable_sort=True) when batch-local conv grouping
-    matters (e.g. a future conv-level warm cache inside the UDF)."""
+    at local[32] on a 1M-turn corpus)."""
     return df.sortWithinPartitions("conv_id", "turn_idx", "ts", "role")

@@ -30,7 +30,7 @@ exactness guarantee) skip all of this and set
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -95,15 +95,3 @@ def rebalance(
     finally:
         handle.unpersist()
     return (total + rows_per_file - 1) // rows_per_file
-
-
-def rebalance_files(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    rows_per_file: int,
-    order_by: list[str] | None = None,
-) -> int:
-    """File-level twin of the reference CLI (cli.py:347-401): read a
-    parquet directory, rewrite it balanced."""
-    return rebalance(spark.read.parquet(in_path), out_path, rows_per_file, order_by)

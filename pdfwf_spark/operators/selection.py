@@ -63,29 +63,6 @@ def mitchell_log2_milli(v: Column) -> Column:
     return F.when(v >= 1, F.lit(1000) * (bl - 1).cast("long") + frac)
 
 
-def hashed_ngram_buckets(
-    text_col: Column,
-    n_buckets: int = DEFAULT_BUCKETS,
-    salt: str = "dsir",
-) -> Column:
-    """array<long>: the md5 hash bucket of every unigram AND bigram of
-    the whitespace-tokenized lowercased text, WITH multiplicity — the
-    DSIR feature extractor. Pure projection (whole-stage codegen,
-    scan-side at any scale); the md5-first-8-hex-chars -> [0, 2^32)
-    idiom is the same one sampling._hash_bucket pins, so DuckDB
-    reproduces bucket ids exactly.
-    """
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    grams = F.concat(toks, word_ngrams(toks, 2))
-    return F.transform(
-        grams,
-        lambda g: F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + "#"), g)), 1, 8), 16, 10
-        ).cast("long")
-        % n_buckets,
-    )
-
-
 def _gram_rows(
     docs: DataFrame,
     cols: list,
@@ -95,9 +72,12 @@ def _gram_rows(
     outer: bool = False,
 ) -> DataFrame:
     """(… cols …, bucket) — one row per hashed unigram/bigram of each
-    document. Two deliberate plan choices vs mapping the array through
-    hashed_ngram_buckets and exploding the result (r6 optimization,
-    guide §2.5/§4.1):
+    document, WITH multiplicity — the DSIR feature extractor. The
+    md5-first-8-hex-chars -> [0, 2^32) idiom is the same one
+    sampling._hash_bucket pins, so DuckDB reproduces bucket ids
+    exactly. Two deliberate plan choices vs hashing inside an array
+    `transform` and exploding the result (r6 optimization, guide
+    §2.5/§4.1):
 
     - the scan is repartitioned first (exploded_shingles precedent): a
       single-row-group parquet file otherwise pins the whole md5 pass
@@ -106,9 +86,8 @@ def _gram_rows(
       expression (whole-stage codegen) instead of inside an array
       `transform` lambda (interpreted per element).
 
-    Bucket values are bit-identical to hashed_ngram_buckets (same md5
-    over the same gram strings); explode_outer keeps gram-less docs
-    with a NULL bucket (null gram -> null concat -> null md5).
+    explode_outer keeps gram-less docs with a NULL bucket (null gram ->
+    null concat -> null md5).
     """
     from pdfwf_spark.operators.partitioning import repartition_for_scan
 

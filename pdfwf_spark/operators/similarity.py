@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdfwf_spark.operators.dedup import (
-    DEFAULT_MAX_BUCKET, _log_drops, cap_hot_groups,
-)
+from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, cap_hot_groups
 
 
 def _as_double(v: Column) -> Column:
@@ -318,20 +316,6 @@ def _probe_dim(emb: DataFrame, vec_col: str) -> int | None:
     return int(row["d"]) if row and row["d"] is not None else None
 
 
-def hyperplane_buckets(
-    emb: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    table: int = 0,
-) -> DataFrame:
-    dim = _probe_dim(emb, vec_col)
-    return emb.withColumn(
-        "bucket", hyperplane_bucket(vec_col, n_planes, seed, table, dim)
-    )
-
-
 def bucketed_neardup_pairs(
     emb: DataFrame,
     threshold_milli: int = 950,
@@ -341,7 +325,6 @@ def bucketed_neardup_pairs(
     n_tables: int = 2,
     seed: int = 42,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    log_drops: bool = False,
     cap_mode: str = "drop",
 ) -> DataFrame:
     """Near-duplicate pairs (cosine >= threshold) among same-bucket
@@ -379,9 +362,6 @@ def bucketed_neardup_pairs(
         )
     ).alias("tb")
     exploded = base.select("id", tb).select("id", "tb.tbl", "tb.bucket")
-    if log_drops:
-        _log_drops(exploded, ["tbl", "bucket"], max_bucket_size,
-                   "bucketed_neardup_pairs")
     exploded = cap_hot_groups(
         exploded, ["tbl", "bucket"], max_bucket_size,
         mode=cap_mode, salt_key="id",

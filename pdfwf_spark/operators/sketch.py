@@ -3,7 +3,7 @@
 The reference's timer notebooks summarize distributions with exact
 percentiles over driver-collected CSVs (examples/strong_scaling.ipynb
 cell 0 quantile calls); on a 10^12-row corpus "sort it all" is not an
-algorithm, so this module carries the three scale paths:
+algorithm, so this module carries two scale paths:
 
 1. histogram_quantiles — EXACT interpolated quantiles with no global
    sort: one map-side-combined groupBy over the (small-domain) value
@@ -15,13 +15,9 @@ algorithm, so this module carries the three scale paths:
    exact quantiles over the sample. Partitioning-invariant (the sample
    predicate depends only on the row key), merge-free, and the
    identical predicate is valid DuckDB SQL, so it is oracle-able too.
-3. mp_quantile_sketch — a mergeable deterministic Munro–Paterson-style
-   multi-level compaction sketch built from per-partition partials
-   (mapInPandas) merged in one tiny driver reduce. Rank error is
-   bounded by the compaction capacity; the result depends on
-   partitioning, so this one is pytest-error-bound territory, not
-   oracle territory — the exact same trade Spark's own
-   approx_percentile (Greenwald–Khanna partials + merge) makes.
+
+It also holds exact two-pass heavy hitters (Misra-Gries candidates,
+then an exact recount) and HyperLogLog register states.
 """
 
 from __future__ import annotations
@@ -196,170 +192,6 @@ def hash_sample_quantiles(
         F.sum(F.col("keep").cast("long")).alias("n_sampled"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Munro–Paterson-style deterministic mergeable sketch
-# ---------------------------------------------------------------------------
-
-# one row per input partition: the whole partial sketch
-_SKETCH_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "levels",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("level", T.IntegerType(), False),
-                        T.StructField(
-                            "items", T.ArrayType(T.DoubleType()), False
-                        ),
-                    ]
-                )
-            ),
-            False,
-        ),
-        T.StructField("n", T.LongType(), False),
-    ]
-)
-
-
-def _compact(levels: dict[int, np.ndarray], capacity: int) -> None:
-    """Deterministic compaction: any level over capacity is sorted,
-    the even-index item of each adjacent PAIR is promoted one level up
-    (a promoted item stands for twice as many rows), and an odd
-    leftover item stays at the current level — so total represented
-    weight sum(len(level_l) * 2^l) is conserved EXACTLY (a plain
-    buf[::2] promotion of an odd buffer would round the weight up).
-    Even-index selection (vs KLL's coin flip) keeps the sketch
-    deterministic at the cost of a worse constant in the rank-error
-    bound — the classical Munro–Paterson trade."""
-    lvl = 0
-    while lvl <= max(levels, default=-1):
-        buf = levels.get(lvl)
-        if buf is not None and len(buf) > capacity:
-            buf = np.sort(buf)
-            n_pairs = len(buf) // 2
-            leftover = buf[2 * n_pairs:]  # 0 or 1 item, the sorted max
-            levels[lvl] = leftover
-            levels[lvl + 1] = np.concatenate(
-                [
-                    levels.get(lvl + 1, np.empty(0, dtype=np.float64)),
-                    buf[: 2 * n_pairs : 2],
-                ]
-            )
-        lvl += 1
-
-
-def _partial_sketches(capacity: int) -> Callable:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        levels: dict[int, np.ndarray] = {}
-        n = 0
-        for pdf in batches:
-            vals = pdf.iloc[:, 0].to_numpy(dtype=np.float64)
-            vals = vals[~np.isnan(vals)]
-            if len(vals) == 0:
-                continue
-            n += len(vals)
-            levels[0] = np.concatenate(
-                [levels.get(0, np.empty(0, dtype=np.float64)), vals]
-            )
-            _compact(levels, capacity)
-        if n == 0:
-            return
-        yield pd.DataFrame(
-            {
-                "levels": [
-                    [
-                        {"level": lvl, "items": buf.tolist()}
-                        for lvl, buf in sorted(levels.items())
-                        if len(buf)
-                    ]
-                ],
-                "n": [n],
-            }
-        )
-
-    return fn
-
-
-def mp_quantile_sketch(
-    df: DataFrame, value_col: str, qs: Sequence[float], capacity: int = 2048
-) -> dict:
-    """Mergeable deterministic quantile sketch over `value_col`.
-
-    Per-partition partials via mapInPandas — each one row holding a
-    ≤ log2(rows/capacity) × capacity summary independent of partition
-    size — merged on the driver. numPartitions small rows cross to the
-    driver, never raw data; the same partial/merge shape as Spark's
-    approx_percentile. Rank error is bounded by (#levels × merges) /
-    capacity; tests/test_sketch.py pins ≤ 2% at capacity 2048 on 1e5
-    rows across 32 partitions.
-
-    Returns {"n": long, "quantiles": {q: float}} — a driver-side dict,
-    because the output is a scalar summary, not a table.
-    """
-    _check_qs(qs)
-    parts = df.select(F.col(value_col).cast("double")).mapInPandas(
-        _partial_sketches(capacity), _SKETCH_SCHEMA
-    )
-    rows = parts.collect()
-    if not rows:
-        return {"n": 0, "quantiles": {q: None for q in qs}}
-    merged: dict[int, np.ndarray] = {}
-    n_total = 0
-    for r in rows:
-        n_total += int(r["n"])
-        for entry in r["levels"]:
-            lvl = int(entry["level"])
-            merged[lvl] = np.concatenate(
-                [
-                    merged.get(lvl, np.empty(0, dtype=np.float64)),
-                    np.asarray(entry["items"], dtype=np.float64),
-                ]
-            )
-    _compact(merged, capacity)
-    # weighted order statistics: a level-l item stands for 2^l rows
-    vals = np.concatenate([buf for buf in merged.values() if len(buf)])
-    wts = np.concatenate(
-        [
-            np.full(len(buf), 2**lvl, dtype=np.int64)
-            for lvl, buf in merged.items()
-            if len(buf)
-        ]
-    )
-    order = np.argsort(vals, kind="stable")
-    vals, wts = vals[order], wts[order]
-    cum = np.cumsum(wts)
-    total = int(cum[-1])
-    out = {}
-    for q in qs:
-        target = q * (total - 1)
-        idx = min(int(np.searchsorted(cum, target, side="right")), len(vals) - 1)
-        out[q] = float(vals[idx])
-    return {"n": n_total, "quantiles": out}
-
-
-def approx_quantiles_builtin(
-    df: DataFrame, value_col: str, qs: Sequence[float], accuracy: int = 10000
-) -> DataFrame:
-    """Spark's own Greenwald–Khanna sketch (approx_percentile): the
-    production default on a real cluster — fully distributed partial
-    aggregation, rank error ≤ 1/accuracy. Kept alongside the exact
-    histogram path so callers trade error for shuffle volume
-    explicitly."""
-    _check_qs(qs)
-    arr = F.expr(
-        f"approx_percentile({value_col}, "
-        f"array({', '.join(repr(q) for q in qs)}), {accuracy})"
-    )
-    sel = [
-        F.round(1000 * F.element_at(arr, i + 1))
-        .cast("long")
-        .alias(_milli_label(q))
-        for i, q in enumerate(qs)
-    ]
-    return df.agg(*sel, F.count(F.lit(1)).alias("n_rows"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """End-to-end extraction job (SURVEY §3.1 Spark lifecycle).
 
     scan -> anti-join lineage (resume) -> [salted repartition, only if
-    the scan layout needs it] -> mapInPandas(sniff -> route -> parse)
+    the scan layout needs it] -> mapInArrow(sniff -> route -> parse)
     -> stable ordering window -> write data, then lineage
 
 Plan properties (asserted in tests via .explain):
@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pdfwf_spark.operators.extract import extract_turns
 from pdfwf_spark.operators.lineage import filter_uncommitted, lineage_rows, read_lineage
 from pdfwf_spark.schemas import LINEAGE_SCHEMA
-from pdfwf_spark.operators.ordering import sort_for_extraction, with_turn_rank
+from pdfwf_spark.operators.ordering import with_turn_rank
 from pdfwf_spark.operators.partitioning import (
     DEFAULT_BUCKETS,
     DEFAULT_SALTS,
@@ -60,16 +60,8 @@ class RunResult:
     lineage_s: float = 0.0
 
 
-def _stage_inputs(
-    transcripts: DataFrame,
-    n_buckets: int,
-    n_partitions: int,
-    n_salts: int,
-    prepartition: str,
-    stable_sort: bool = False,
-) -> DataFrame:
-    """Bucket + (conditionally) salt-repartition + stable intra-
-    partition sort.
+def _salts(transcripts: DataFrame, n_partitions: int | None, prepartition: str) -> bool:
+    """Whether staging salt-repartitions the input.
 
     prepartition:
     - "auto" (default): shuffle only when the scan has fewer
@@ -83,15 +75,13 @@ def _stage_inputs(
       layout is conv-clustered/skewed (e.g. one giant file per
       mega-conversation) where scan splits alone would be unbalanced.
     - "never": trust the scan layout unconditionally.
+
+    n_partitions defaults to the session's defaultParallelism.
     """
-    staged = with_bucket(transcripts, n_buckets)
-    if prepartition == "always" or (
-        prepartition == "auto" and staged.rdd.getNumPartitions() < n_partitions
-    ):
-        staged = salted_repartition(staged, n_partitions, n_salts)
-    if stable_sort:
-        staged = sort_for_extraction(staged)
-    return staged
+    if prepartition != "auto":
+        return prepartition == "always"
+    target = n_partitions or transcripts.sparkSession.sparkContext.defaultParallelism
+    return transcripts.rdd.getNumPartitions() < target
 
 
 def extract_df(
@@ -100,20 +90,19 @@ def extract_df(
     n_partitions: int | None = None,
     n_salts: int = DEFAULT_SALTS,
     prepartition: str = "auto",
-    stable_sort: bool = False,
     markdown_compat: bool = False,
 ) -> DataFrame:
     """Pure transform: transcripts -> ranked extraction output (all
     statuses). Composable; no I/O.
 
+    Bucket + (conditionally) salt-repartition, extract, rank.
     markdown_compat: the reference's optional markdown repair pass
     (nougat_.py:245-246, config.markdown) — applied JVM-side on
     clean_text (codegen'd regexes, no extra Python)."""
-    spark = transcripts.sparkSession
-    n_partitions = n_partitions or spark.sparkContext.defaultParallelism
-    staged = _stage_inputs(
-        transcripts, n_buckets, n_partitions, n_salts, prepartition, stable_sort
-    )
+    n_partitions = n_partitions or transcripts.sparkSession.sparkContext.defaultParallelism
+    staged = with_bucket(transcripts, n_buckets)
+    if _salts(transcripts, n_partitions, prepartition):
+        staged = salted_repartition(staged, n_partitions, n_salts)
     out = with_turn_rank(extract_turns(staged))
     if markdown_compat:
         from pdfwf_spark.operators.functions import markdown_compatible_col
@@ -151,16 +140,16 @@ def run_extraction(
     data_path = f"{out_dir}/turns"
     lineage_path = f"{out_dir}/lineage"
 
-    inputs = with_bucket(transcripts, n_buckets)
     if resume:
-        inputs = filter_uncommitted(inputs, read_lineage(spark, lineage_path))
-
-    n_partitions = n_partitions or spark.sparkContext.defaultParallelism
-    # reuse the same staging logic as extract_df (bucket col already
-    # attached above, so _stage_inputs' with_bucket is a no-op rebuild)
-    staged = _stage_inputs(
-        inputs.drop("bucket"), n_buckets, n_partitions, n_salts, prepartition
-    )
+        # settle the salt choice on the input scan: asking the
+        # anti-joined plan for its partition count (.rdd) would run the
+        # lineage side as Spark jobs before the write, and the write
+        # would run it again. A broadcast left-anti join keeps the
+        # streamed side's partitioning, so the choice is the same.
+        prepartition = "always" if _salts(transcripts, n_partitions, prepartition) else "never"
+        transcripts = filter_uncommitted(
+            with_bucket(transcripts, n_buckets), read_lineage(spark, lineage_path)
+        ).drop("bucket")
     # ONE materialization of the extraction output: the all-status
     # ranked rows go straight to the staging write (no persist — at
     # 100 TB a MEMORY_AND_DISK persist of the full post-extraction
@@ -172,15 +161,9 @@ def run_extraction(
     # extract_df and the golden generator); read_output filters them,
     # preserving the reference's failed-docs-have-no-output-row
     # semantics (README.md:115-116) while lineage still counts them.
-    all_ranked = with_turn_rank(extract_turns(staged)).withColumn(
-        "run_id", F.lit(run_id)
-    )
-    if markdown_compat:
-        from pdfwf_spark.operators.functions import markdown_compatible_col
-
-        all_ranked = all_ranked.withColumn(
-            "clean_text", markdown_compatible_col(F.col("clean_text"))
-        )
+    all_ranked = extract_df(
+        transcripts, n_buckets, n_partitions, n_salts, prepartition, markdown_compat
+    ).withColumn("run_id", F.lit(run_id))
     t_write = time.monotonic()
     append_data(all_ranked, data_path)
     write_s = time.monotonic() - t_write

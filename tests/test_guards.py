@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from pdfwf_spark.operators.dedup import (
     cap_hot_groups,
-    hot_group_report,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -49,14 +48,6 @@ def test_cap_hot_groups_drops_only_oversized(spark):
     keys = [r["key"] for r in kept.select("key").distinct().collect()]
     assert keys == ["small"]
     assert cap_hot_groups(df, ["key"], None).count() == 65  # None disables
-
-
-def test_hot_group_report_names_the_bucket(spark):
-    df = spark.createDataFrame(
-        [(i, "big") for i in range(60)] + [(0, "small")], "id long, key string"
-    )
-    rows = hot_group_report(df, ["key"], 50).collect()
-    assert [(r["key"], r["group_size"]) for r in rows] == [("big", 60)]
 
 
 def test_lsh_candidate_cap_engages(skewed_docs):

@@ -1048,59 +1048,6 @@ def test_media_features_real_twin(spark):
             assert r["zero_cross"] == int(np.count_nonzero(sgn[1:] != sgn[:-1]))
 
 
-def test_resize_images_roundtrip_fake_and_real(spark):
-    from pdfwf_spark.operators.multimodal import (
-        decode_media, make_fake_media, make_real_media, resize_images,
-    )
-
-    fake = spark.createDataFrame(
-        [(i, make_fake_media(i, "image")) for i in range(4)],
-        "doc_id long, content binary",
-    )
-    rs = resize_images(fake, 6, 5, fake=True)
-    meta = {r["doc_id"]: r for r in decode_media(rs, fake=True).collect()}
-    assert all(meta[i]["width"] == 6 and meta[i]["height"] == 5 for i in range(4))
-
-    real = spark.createDataFrame(
-        [(i, make_real_media(i, "image")) for i in range(0, 8, 2)],
-        "doc_id long, content binary",
-    )
-    rr = resize_images(real, 3, 2, fake=False)
-    rmeta = {r["doc_id"]: r for r in decode_media(rr, fake=False).collect()}
-    assert all(
-        rmeta[i]["media_type"] == "image"
-        and rmeta[i]["width"] == 3 and rmeta[i]["height"] == 2
-        for i in range(0, 8, 2)
-    )
-
-    # non-image: NULL passthrough, or NotImplementedError under strict
-    import pytest as _pytest
-
-    wav = spark.createDataFrame(
-        [(1, make_real_media(1, "audio"))], "doc_id long, content binary"
-    )
-    assert resize_images(wav, 2, 2).collect()[0]["content"] is None
-    with _pytest.raises(Exception, match="NotImplementedError|no resampler"):
-        resize_images(wav, 2, 2, strict=True).collect()
-
-
-def test_resize_nearest_neighbor_exact(spark):
-    import struct
-
-    import numpy as np
-
-    from pdfwf_spark.operators.multimodal import IMG_MAGIC, resize_images
-
-    # 2x2 image upscaled 2x: each source pixel becomes a 2x2 block
-    px = np.array([[10, 20], [30, 40]], dtype=np.uint8)
-    blob = IMG_MAGIC + struct.pack(">II", 2, 2) + px.tobytes()
-    media = spark.createDataFrame([(1, blob)], "doc_id long, content binary")
-    out = resize_images(media, 4, 4, fake=True).collect()[0]["content"]
-    body = np.frombuffer(bytes(out), dtype=np.uint8, offset=15).reshape(4, 4)
-    want = np.repeat(np.repeat(px, 2, axis=0), 2, axis=1)
-    assert (body == want).all()
-
-
 def test_sample_frames_twin_and_strict(spark):
     import struct
 
@@ -1130,23 +1077,6 @@ def test_sample_frames_twin_and_strict(spark):
         assert sorted(got[i]) == want, i
     with _pytest.raises(Exception, match="NotImplementedError|no video codec"):
         sample_frames(media, strict=True).collect()
-
-
-def test_resize_rejects_non_24bpp_bmp(spark):
-    import struct
-
-    from pdfwf_spark.operators.multimodal import resize_images
-
-    # valid-looking BMP header but 8bpp: must take the stub path, not
-    # mis-slice rows with 24bpp stride math
-    px = bytes(range(16))
-    bmp8 = (
-        struct.pack("<2sIHHI", b"BM", 54 + len(px), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, 4, 4, 1, 8, 0, len(px), 0, 0, 0, 0)
-        + px
-    )
-    media = spark.createDataFrame([(1, bmp8)], "doc_id long, content binary")
-    assert resize_images(media, 2, 2).collect()[0]["content"] is None
 
 
 def test_ivf_kmeans_full_probe_equals_brute_force(spark):
@@ -1221,7 +1151,7 @@ def test_bloom_resume_edge_cases(spark):
 
 
 def test_snapshot_diff_kinds(spark):
-    from pdfwf_spark.operators.diff import diff_summary, snapshot_diff
+    from pdfwf_spark.operators.diff import snapshot_diff
 
     old = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", None), (4, "d", 40)],
@@ -1238,9 +1168,6 @@ def test_snapshot_diff_kinds(spark):
 
     withu = snapshot_diff(old, new, "id", include_unchanged=True)
     assert {r["id"]: r["change"] for r in withu.collect()}[2] == "unchanged"
-
-    summ = {r["change"]: r["n_rows"] for r in diff_summary(old, new, "id").collect()}
-    assert summ == {"removed": 1, "changed": 2, "added": 1}
 
 
 def test_snapshot_diff_subset_columns_and_guards(spark):

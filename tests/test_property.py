@@ -192,23 +192,3 @@ def test_greedy_pack_kernel_invariants(lengths, budget):
     ok = out[out["truncated"] == 0]
     fills = ok.groupby("seq_idx")["n"].sum()
     assert (fills <= budget).all()
-
-
-@given(st.lists(st.floats(min_value=-1e6, max_value=1e6,
-                          allow_nan=False, allow_infinity=False),
-                min_size=1, max_size=3000))
-@settings(max_examples=25, deadline=None)
-def test_mp_sketch_compaction_rank_bound(vals):
-    import numpy as np
-
-    from pdfwf_spark.operators.sketch import _compact
-
-    capacity = 64
-    levels = {0: np.asarray(vals, dtype=np.float64)}
-    _compact(levels, capacity)
-    # every level within capacity afterwards; total weight conserved
-    total = 0
-    for lvl, buf in levels.items():
-        assert len(buf) <= capacity, (lvl, len(buf))
-        total += len(buf) * (2 ** lvl)
-    assert total == len(vals)

@@ -5,7 +5,6 @@ cheaper plans)."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -69,53 +68,135 @@ def test_pair_counts_equals_plain_groupby(spark):
     assert _rows(_distinct_pairs(pairs)) == _rows(pairs.distinct())
 
 
-def test_extract_arrow_kernel_equals_pandas_kernel():
-    """The mapInArrow extraction kernel and the pandas twin produce
-    identical rows for every payload family, including failures."""
+_PASSTHROUGH = ["conv_id", "turn_idx", "role", "ts", "bucket", "tie_key"]
+
+
+def _kernel_batch(texts, tools=None):
+    """One input RecordBatch for _extract_batches_arrow, typed as Spark
+    hands it over (passthrough columns at their EXTRACTED_SCHEMA types)."""
     import datetime
 
-    from pdfwf_spark.operators import extract as ex
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    texts = [
-        '<html><head><title>t</title></head><body><p>hello &amp; world</p>'
-        '<nav>skip me</nav></body></html>',
-        "%PDFISH1\nPAGE 1 612 792\nBLOCK 72 72 540 100 title|doc\n"
-        "BLOCK 72 120 540 700 text|body words here",
-        "plain text\n\n\n\ntail paragraph.",
-        "",           # empty payload
-        None,         # null payload
-    ]
+    from pdfwf_spark.schemas import EXTRACTED_SCHEMA
+
+    want = to_arrow_schema(EXTRACTED_SCHEMA)
     n = len(texts)
-    base = {
+    cols = {
         "conv_id": [f"c{i}" for i in range(n)],
         "turn_idx": list(range(n)),
         "role": ["user"] * n,
-        "ts": [datetime.datetime(2025, 1, 1)] * n,
+        "ts": [datetime.datetime(2025, 1, 1, 0, 0, i) for i in range(n)],
         "text": texts,
-        "tool": [""] * n,
-        "bucket": [0] * n,
+        "tool": tools if tools is not None else [""] * n,
+        "bucket": [i % 3 for i in range(n)],
         "tie_key": [f"k{i}" for i in range(n)],
     }
-    pdf = pd.DataFrame(base)
-    rb = pa.RecordBatch.from_pydict(
-        {
-            **{k: v for k, v in base.items()},
-        }
+    schema = pa.schema(
+        [
+            pa.field(c, pa.string()) if c in ("text", "tool")
+            else pa.field(c, want.field(c).type)
+            for c in cols
+        ]
     )
-    out_pd = list(ex._extract_batches(iter([pdf])))[0]
-    out_pa = list(ex._extract_batches_arrow(iter([rb])))[0]
-    pa_dict = out_pa.to_pydict()
-    for col in ["parser", "parse_status", "fail_reason", "source_col",
-                "clean_text", "spans", "meta", "bytes_in", "bytes_out",
-                "conv_id", "turn_idx", "tie_key"]:
-        pd_vals = list(out_pd[col])
-        pa_vals = pa_dict[col]
-        if col == "meta":
-            pd_vals = [dict(v) for v in pd_vals]
-            pa_vals = [dict(v) for v in pa_vals]
-        if col == "spans":
-            pd_vals = [list(v) for v in pd_vals]
-        assert pd_vals == pa_vals, col
+    return pa.RecordBatch.from_pydict(cols, schema=schema)
+
+
+_KERNEL_TEXTS = [
+    '<html><head><title>t</title></head><body><p>hello &amp; world</p>'
+    '<nav>skip me</nav></body></html>',
+    "%PDFISH1\nPAGE 1 612 792\nBLOCK 72 72 540 100 title|doc\n"
+    "BLOCK 72 120 540 700 text|body words here",
+    "plain text\n\n\n\ntail paragraph.",
+    "",  # empty payload
+    None,  # null payload
+    "%PDFISH1\nBLOCK 0 0 1 1 text|orphan",  # broken: block before any page
+    None,  # null text, payload in the tool column
+]
+_KERNEL_TOOLS = [""] * 6 + ["<body><p>tool html</p></body>"]
+
+
+def test_extract_arrow_kernel_rows_equal_extract_payload():
+    """Every output row of the Arrow kernel is extract_payload on that
+    row's (text, tool), across all payload families and failures."""
+    from pdfwf_spark.core.route import extract_payload
+    from pdfwf_spark.operators import extract as ex
+
+    (out,) = ex._extract_batches_arrow(
+        iter([_kernel_batch(_KERNEL_TEXTS, _KERNEL_TOOLS)])
+    )
+    got = out.to_pylist()
+    statuses = set()
+    for row, text, tool in zip(got, _KERNEL_TEXTS, _KERNEL_TOOLS):
+        t, u = text or "", tool or ""
+        res = extract_payload(t, u)
+        statuses.add((res.parser, res.status))
+        assert row["parser"] == res.parser
+        assert row["parse_status"] == res.status
+        assert row["fail_reason"] == res.reason
+        assert row["source_col"] == res.source
+        assert row["clean_text"] == res.clean_text
+        assert row["spans"] == [
+            {"start": s.start, "end": s.end, "label": s.label} for s in res.spans
+        ]
+        assert dict(row["meta"]) == res.meta
+        assert row["bytes_in"] == len(t) + len(u)
+        assert row["bytes_out"] == len(res.clean_text)
+    # the fixture really covers every family and both outcomes
+    assert {p for p, st in statuses if st == "ok"} == {"html", "pdfish", "plain"}
+    assert ("pdfish", "failed") in statuses
+    assert sum(st == "failed" for _, st in statuses) >= 2
+
+
+def test_extract_arrow_kernel_passthrough_and_schema():
+    """Passthrough columns come back as the input arrays, same types;
+    the batch schema is the Arrow form of EXTRACTED_SCHEMA."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdfwf_spark.operators import extract as ex
+    from pdfwf_spark.schemas import EXTRACTED_SCHEMA
+
+    rb = _kernel_batch(_KERNEL_TEXTS, _KERNEL_TOOLS)
+    (out,) = ex._extract_batches_arrow(iter([rb]))
+    for c in _PASSTHROUGH:
+        assert out.column(c).type == rb.column(c).type, c
+        assert out.column(c).equals(rb.column(c)), c
+    want = to_arrow_schema(EXTRACTED_SCHEMA)
+    assert out.schema.names == want.names
+    assert [f.type for f in out.schema] == [f.type for f in want]
+
+
+def test_extract_arrow_kernel_reports_init_once(monkeypatch):
+    """The warm-start cost lands on exactly one row across two kernel
+    calls in one process."""
+    from pdfwf_spark.operators import extract as ex
+
+    ex._warm_parser()
+    monkeypatch.setattr(ex, "_INIT_US", 1234)
+    rows = []
+    for _ in range(2):
+        for out in ex._extract_batches_arrow(
+            iter([_kernel_batch(["a", "b"]), _kernel_batch(["c"])])
+        ):
+            rows += out.column("init_us").to_pylist()
+    assert len(rows) == 6
+    assert [v for v in rows if v] == [1234]
+    assert rows[0] == 1234
+
+
+def test_extract_arrow_kernel_empty_call_hands_init_on(monkeypatch):
+    """A call that sees only empty batches emits nothing and leaves the
+    init cost for the next call to report."""
+    from pdfwf_spark.operators import extract as ex
+
+    ex._warm_parser()
+    monkeypatch.setattr(ex, "_INIT_US", 1234)
+    empty = _kernel_batch(["x"]).slice(0, 0)
+    assert list(ex._extract_batches_arrow(iter([empty, empty]))) == []
+    assert ex._INIT_US == 1234
+    (out,) = ex._extract_batches_arrow(iter([_kernel_batch(["a", "b"])]))
+    assert out.column("init_us").to_pylist() == [1234, 0]
+    assert ex._INIT_US == 0
 
 
 def test_dup_clusters_pointer_jump_on_chain(spark):

@@ -1,0 +1,104 @@
+"""Reachability guard: every top-level def/class in pdfwf_spark/ has a
+caller in product code — the package itself, jobs/, tools/,
+__spark_entry__.py and the bench scripts. Tests do not count as
+callers.
+
+A name counts as referenced when it appears as a code token (comments
+and strings stripped) outside its own definition. Names that fail
+this on purpose sit in ALLOWED, each with a one-line reason; an
+allowlisted name that gains a caller or is deleted must leave the
+list.
+"""
+
+from __future__ import annotations
+
+import ast
+import io
+import tokenize
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+
+ALLOWED = {
+    "pdfwf_spark/operators/dedup.py:exact_surrogate_ids":
+        "the surrogate_id collision error tells users to call it",
+    "pdfwf_spark/operators/sketch.py:hll_estimate":
+        "the only reader of hll_register_state's output",
+    "pdfwf_spark/core/normalize.py:fix_mojibake":
+        "the Python twin fix_mojibake_col is tested against",
+    "pdfwf_spark/fixtures/golden.py:golden_records":
+        "the golden reference for tests and the end-to-end benchmark",
+    "pdfwf_spark/sinks/jsonl.py:read_jsonl":
+        "JSONL source: documented product surface",
+    "pdfwf_spark/sinks/jsonl.py:parquet_to_jsonl":
+        "JSONL export: documented product surface",
+    "pdfwf_spark/sinks/bucketed.py:write_bucketed":
+        "bucketed sink: documented product surface",
+    "pdfwf_spark/sinks/bucketed.py:read_bucketed":
+        "bucketed sink: documented product surface",
+    "pdfwf_spark/streaming/context.py:start_context_assembly":
+        "streaming starter: documented product surface",
+    "pdfwf_spark/streaming/dedup.py:start_incremental_dedup":
+        "streaming starter: documented product surface",
+    "pdfwf_spark/streaming/ingest.py:start_ingest":
+        "streaming starter: documented product surface",
+    "pdfwf_spark/streaming/sessions.py:start_session_agg":
+        "streaming starter: documented product surface",
+    "pdfwf_spark/streaming/sessions.py:batch_sessions":
+        "batch twin the streaming session operator is tested against",
+}
+
+
+def _code_files() -> list[Path]:
+    files = sorted(ROOT.glob("pdfwf_spark/**/*.py"))
+    files += sorted(ROOT.glob("jobs/*.py")) + sorted(ROOT.glob("tools/*.py"))
+    files += [
+        ROOT / f
+        for f in ("__spark_entry__.py", "bench.py", "bench_extra.py", "scaling_bench.py")
+    ]
+    return files
+
+
+def _name_tokens(path: Path) -> list[tuple[str, int]]:
+    """(identifier, line) for every NAME token: comments and string
+    literals are separate token types, so they never match."""
+    src = path.read_text()
+    return [
+        (t.string, t.start[0])
+        for t in tokenize.generate_tokens(io.StringIO(src).readline)
+        if t.type == tokenize.NAME
+    ]
+
+
+def _unreferenced() -> set[str]:
+    by_name: dict[str, list[tuple[Path, int]]] = {}
+    for f in _code_files():
+        for name, line in _name_tokens(f):
+            by_name.setdefault(name, []).append((f, line))
+    dead = set()
+    for f in sorted(ROOT.glob("pdfwf_spark/**/*.py")):
+        for node in ast.parse(f.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            outside = [
+                (g, line)
+                for g, line in by_name.get(node.name, [])
+                if not (g == f and first <= line <= node.end_lineno)
+            ]
+            if not outside:
+                dead.add(f"{f.relative_to(ROOT).as_posix()}:{node.name}")
+    return dead
+
+
+def test_every_definition_has_a_caller():
+    unexplained = sorted(_unreferenced() - set(ALLOWED))
+    assert not unexplained, (
+        "no caller outside tests; delete these or add them to ALLOWED "
+        f"with a reason: {unexplained}"
+    )
+
+
+def test_allowlist_has_no_stale_entries():
+    stale = sorted(set(ALLOWED) - _unreferenced())
+    assert not stale, f"now referenced or deleted; drop from ALLOWED: {stale}"

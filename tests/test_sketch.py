@@ -6,11 +6,9 @@ from pyspark.sql import functions as F
 
 from pdfwf_spark.operators.sketch import (
     heavy_hitters,
-    approx_quantiles_builtin,
     grouped_histogram_quantiles,
     hash_sample_quantiles,
     histogram_quantiles,
-    mp_quantile_sketch,
 )
 
 QS = [0.5, 0.9, 0.99]
@@ -100,43 +98,6 @@ def test_hash_sample_quantiles_deterministic_and_close(spark, values_df):
     # 25% sample of 20k rows: p50 estimate within 10% of exact
     exact = _exact_milli(values_df, [0.5])[0]
     assert abs(a["p50_milli"] - exact) / exact < 0.10
-
-
-def test_mp_sketch_rank_error_bound(spark):
-    # uniform 1e5 rows over 32 partitions; pin <=2% rank error
-    n = 100_000
-    df = spark.range(n).select(
-        (F.col("id") * 48271 % n).cast("double").alias("v")
-    ).repartition(32)
-    res = mp_quantile_sketch(df, "v", QS, capacity=2048)
-    assert res["n"] == n
-    for q in QS:
-        est = res["quantiles"][q]
-        # value==rank for a permutation of 0..n-1
-        assert abs(est / (n - 1) - q) <= 0.02, (q, est)
-
-
-def test_mp_sketch_small_exact(spark):
-    # below capacity nothing compacts: weighted stats are the exact stats
-    df = spark.createDataFrame([(float(i),) for i in range(100)], "v double")
-    res = mp_quantile_sketch(df, "v", [0.0, 0.5, 1.0], capacity=2048)
-    assert res["n"] == 100
-    assert res["quantiles"][0.0] == 0.0
-    assert res["quantiles"][1.0] == 99.0
-    assert abs(res["quantiles"][0.5] - 49.5) <= 1.0
-
-
-def test_mp_sketch_empty(spark):
-    df = spark.createDataFrame([], "v double")
-    res = mp_quantile_sketch(df, "v", QS)
-    assert res == {"n": 0, "quantiles": {q: None for q in QS}}
-
-
-def test_approx_builtin_close(spark, values_df):
-    got = approx_quantiles_builtin(values_df, "n", QS).collect()[0]
-    exact = _exact_milli(values_df, QS)
-    for k, e in zip(["p50_milli", "p90_milli", "p99_milli"], exact):
-        assert abs(got[k] - e) / max(e, 1) < 0.05
 
 
 # ---------------------------------------------------------------- heavy hitters

@@ -172,6 +172,41 @@ def test_resume_antijoin_is_broadcast(spark, transcripts, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def test_resume_staging_submits_no_job(spark, fixture_rows, tmp_path, monkeypatch):
+    """Building the frame a resume run writes submits no Spark job: the
+    salt decision reads the input scan. Asking the anti-joined plan for
+    its partition count would run the lineage side before the write,
+    and the write would run it again."""
+    import pdfwf_spark.pipeline as pipeline
+
+    transcripts = spark.createDataFrame(
+        [{k: v for k, v in r.items() if not k.startswith("_")} for r in fixture_rows],
+        TRANSCRIPT_SCHEMA,
+    )
+    first_half = with_bucket(transcripts, 8).filter(F.col("bucket") < 4).drop("bucket")
+    sc = spark.sparkContext
+    jobs_before_write = []
+    write = pipeline.append_data
+
+    def recording_write(df, path):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        jobs_before_write.append(list(sc.statusTracker().getJobIdsForGroup(group)))
+        write(df, path)
+
+    monkeypatch.setattr(pipeline, "append_data", recording_write)
+    out = str(tmp_path / "out")
+    runs = []
+    try:
+        # empty output, then a rerun against committed lineage
+        for name, inputs in (("first", first_half), ("rerun", transcripts)):
+            sc.setJobGroup(f"resume-staging-{name}", name)
+            runs.append(run_extraction(spark, inputs, out, n_buckets=8, n_partitions=8))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_before_write == [[], []]
+    assert sum(r.buckets_processed for r in runs) == 8
+
+
 def test_lineage_carries_stage_timings(spark, tmp_path):
     """Lineage schema v3: per-bucket extract_ms ('parser-parse' wall)
     AND init_ms ('initialize-parser' wall, both timer.py:36-129
