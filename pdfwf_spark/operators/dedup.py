@@ -673,7 +673,6 @@ def _cc_on_surrogates(
     pairs: DataFrame,
     id_col: str,
     max_iters: int,
-    verify_surrogates: bool,
 ) -> DataFrame:
     """Run a connected-components function (which needs integral ids)
     over a string-keyed corpus: ids map to md5 surrogates (a pure
@@ -683,10 +682,9 @@ def _cc_on_surrogates(
     component — a contract independent of the surrogate function, so
     oracles and downstream keeper policies never see surrogate order.
 
-    verify_surrogates adds one aggregate pass asserting the surrogate
-    map is injective on this corpus (count_distinct(id) ==
-    count_distinct(surrogate)); disable only if the extra shuffle
-    matters more than the (tiny but corpus-corrupting) collision risk.
+    One aggregate pass asserts the surrogate map is injective on this
+    corpus (count_distinct(id) == count_distinct(surrogate)): a
+    collision, however unlikely, would silently merge clusters.
 
     Shape at 100 TB: surrogate computation is scan-side codegen; the
     relabel is one (cluster-keyed, map-side-combining) min aggregate
@@ -695,18 +693,17 @@ def _cc_on_surrogates(
     orig = docs.select(F.col(id_col).alias("_orig")).withColumn(
         "_sid", surrogate_id(F.col("_orig"))
     )
-    if verify_surrogates:
-        r = orig.agg(
-            F.count_distinct("_orig").alias("n_id"),
-            F.count_distinct("_sid").alias("n_sid"),
-        ).collect()[0]
-        if r["n_id"] != r["n_sid"]:
-            raise ValueError(
-                f"surrogate_id collision: {r['n_id']} distinct ids -> "
-                f"{r['n_sid']} distinct surrogates; clusters would merge. "
-                "Map ids through exact_surrogate_ids() and run the "
-                "cluster op on the integral sids for this corpus."
-            )
+    r = orig.agg(
+        F.count_distinct("_orig").alias("n_id"),
+        F.count_distinct("_sid").alias("n_sid"),
+    ).collect()[0]
+    if r["n_id"] != r["n_sid"]:
+        raise ValueError(
+            f"surrogate_id collision: {r['n_id']} distinct ids -> "
+            f"{r['n_sid']} distinct surrogates; clusters would merge. "
+            "Map ids through exact_surrogate_ids() and run the "
+            "cluster op on the integral sids for this corpus."
+        )
     sdocs = orig.select(F.col("_sid").alias(id_col))
     spairs = pairs.select(
         surrogate_id(F.col("id_a")).alias("id_a"),
@@ -732,7 +729,6 @@ def dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    verify_surrogates: bool = True,
 ) -> DataFrame:
     """Connected components over near-dup pairs: each doc gets the
     MINIMUM id reachable through the pair graph as its cluster_id,
@@ -777,9 +773,7 @@ def dup_clusters(
     _cc_on_surrogates), so callers never see surrogate values.
     """
     if not _is_integral_id(docs, id_col):
-        return _cc_on_surrogates(
-            dup_clusters, docs, pairs, id_col, max_iters, verify_surrogates
-        )
+        return _cc_on_surrogates(dup_clusters, docs, pairs, id_col, max_iters)
     # both edge directions via ONE explode — a union of two selects
     # over `pairs` embeds the (often expensive) pair pipeline twice in
     # the plan, and ReuseExchange does not always collapse the copies
@@ -935,7 +929,6 @@ def dup_clusters_star(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 40,
-    verify_surrogates: bool = True,
 ) -> DataFrame:
     """Connected components in O(log n) rounds via alternating
     large-star / small-star (Kiveris et al., "Connected Components in
@@ -959,9 +952,7 @@ def dup_clusters_star(
     relabel, exactly as dup_clusters (see _cc_on_surrogates).
     """
     if not _is_integral_id(docs, id_col):
-        return _cc_on_surrogates(
-            dup_clusters_star, docs, pairs, id_col, max_iters, verify_surrogates
-        )
+        return _cc_on_surrogates(dup_clusters_star, docs, pairs, id_col, max_iters)
     edges = (
         pairs.select(F.col("id_a").cast("long").alias("u"),
                      F.col("id_b").cast("long").alias("v"))

@@ -189,9 +189,3 @@ def extract_turns(transcripts: DataFrame) -> DataFrame:
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "bucket"]
     staged = transcripts.select(*cols).withColumn("tie_key", tie_key_col())
     return staged.mapInArrow(_extract_batches_arrow, EXTRACTED_SCHEMA)
-
-
-def successes(extracted: DataFrame) -> DataFrame:
-    """Reference semantics: failed docs have no output row
-    (README.md:115-116) — but they stay counted in lineage."""
-    return extracted.filter(F.col("parse_status") == "ok")

@@ -40,16 +40,3 @@ def with_turn_rank(df: DataFrame) -> DataFrame:
         keys += [F.col("text"), F.col("tool")]
     w = Window.partitionBy("conv_id").orderBy(*keys)
     return df.withColumn("turn_rank", F.row_number().over(w))
-
-
-def sort_for_extraction(df: DataFrame) -> DataFrame:
-    """Deterministic intra-partition order before the UDF (the analog
-    of the reference's shuffle=False DataLoaders, nougat_.py:181).
-
-    Used by the streaming micro-batch path (streaming/ingest.py) only.
-    The batch path skips it: extraction is per-row and the output
-    order contract is enforced by the with_turn_rank window, so this
-    sort buys only batch locality while costing a full JVM sort of
-    raw payload bytes per partition (measured ~10 cores of JVM time
-    at local[32] on a 1M-turn corpus)."""
-    return df.sortWithinPartitions("conv_id", "turn_idx", "ts", "role")

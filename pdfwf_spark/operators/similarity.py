@@ -195,7 +195,6 @@ def ivf_assign(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    validate: bool = True,
 ) -> DataFrame:
     """IVF coarse quantization with DETERMINISTIC centroids: the
     vectors with id < n_centroids act as centroids (reproducible in
@@ -219,15 +218,12 @@ def ivf_assign(
     )
     # a non-0-based / non-numeric id space would silently yield an
     # EMPTY centroid set (and an empty inner-join result downstream).
-    # validate=False skips the eager plan-build count for callers who
-    # already know their id space (keeps query construction fully lazy)
-    if validate:
-        n_found = cents.limit(n_centroids).count()
-        if n_found < n_centroids:
-            raise ValueError(
-                f"ivf_assign expects ids 0..{n_centroids - 1} to exist as "
-                f"centroids; found {n_found}. Remap ids or lower n_centroids."
-            )
+    n_found = cents.limit(n_centroids).count()
+    if n_found < n_centroids:
+        raise ValueError(
+            f"ivf_assign expects ids 0..{n_centroids - 1} to exist as "
+            f"centroids; found {n_found}. Remap ids or lower n_centroids."
+        )
     scored = base.crossJoin(F.broadcast(cents)).withColumn(
         "cos_milli",
         F.round(1000 * _dot(F.col("_vec"), F.col("_cvec"))

@@ -14,7 +14,8 @@ Plan properties (asserted in tests via .explain):
 
 Commit protocol (reference analog: convert.py:144-182 timer-log
 checkpointing): data for a run is written first; the per-bucket
-lineage rows are written only after the data write completes.
+lineage rows are written only after the data write completes
+(commit_run, which streaming/ingest.py runs per micro-batch too).
 A crash between the two leaves orphan data files for uncommitted
 buckets; on resume those buckets are re-processed and the orphans are
 superseded on read by filtering to committed run_ids (Iceberg's
@@ -28,7 +29,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -137,9 +138,6 @@ def run_extraction(
             f"run_id {run_id!r} must match [A-Za-z0-9._-]+ (it is used "
             "verbatim as a partition directory name)"
         )
-    data_path = f"{out_dir}/turns"
-    lineage_path = f"{out_dir}/lineage"
-
     if resume:
         # settle the salt choice on the input scan: asking the
         # anti-joined plan for its partition count (.rdd) would run the
@@ -148,7 +146,7 @@ def run_extraction(
         # streamed side's partitioning, so the choice is the same.
         prepartition = "always" if _salts(transcripts, n_partitions, prepartition) else "never"
         transcripts = filter_uncommitted(
-            with_bucket(transcripts, n_buckets), read_lineage(spark, lineage_path)
+            with_bucket(transcripts, n_buckets), read_lineage(spark, f"{out_dir}/lineage")
         ).drop("bucket")
     # ONE materialization of the extraction output: the all-status
     # ranked rows go straight to the staging write (no persist — at
@@ -165,16 +163,11 @@ def run_extraction(
         transcripts, n_buckets, n_partitions, n_salts, prepartition, markdown_compat
     ).withColumn("run_id", F.lit(run_id))
     t_write = time.monotonic()
-    append_data(all_ranked, data_path)
+    append_data(all_ranked, f"{out_dir}/turns")
     write_s = time.monotonic() - t_write
 
     t_lineage = time.monotonic()
-    lin_rows = lineage_from_written(spark, data_path, run_id).collect()
-    # <= n_buckets rows land on the driver; re-wrapping them keeps the
-    # lineage append from re-scanning the read-back a second time
-    append_lineage(
-        spark.createDataFrame(lin_rows, LINEAGE_SCHEMA), lineage_path
-    )
+    lin_rows = commit_run(spark, out_dir, run_id)
     lineage_s = time.monotonic() - t_lineage
 
     n = sum(r["input_count"] for r in lin_rows)
@@ -203,6 +196,18 @@ _READBACK_SCHEMA = T.StructType(
         T.StructField("bucket", T.IntegerType(), True),
     ]
 )
+
+
+def commit_run(spark: SparkSession, out_dir: str, run_id: str) -> list[Row]:
+    """Commit one run whose data is already under {out_dir}/turns:
+    per-bucket lineage from a read-back of the files it wrote, then
+    the lineage append — the LAST write, whose presence marks the run
+    committed for read_output and resume. Returns the lineage rows."""
+    lin_rows = lineage_from_written(spark, f"{out_dir}/turns", run_id).collect()
+    # <= n_buckets rows land on the driver; re-wrapping them keeps the
+    # lineage append from re-scanning the read-back a second time
+    append_lineage(spark.createDataFrame(lin_rows, LINEAGE_SCHEMA), f"{out_dir}/lineage")
+    return lin_rows
 
 
 def lineage_from_written(spark: SparkSession, data_path: str, run_id: str) -> DataFrame:

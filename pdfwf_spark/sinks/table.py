@@ -8,8 +8,8 @@ engine's contract is a table append:
   commit, the real exactly-once story at cluster scale). The Iceberg
   runtime jars are not in this sandbox image, so this path is gated
   behind a capability probe and exercised only as plumbing.
-- Fallback: parquet directory partitioned by `bucket` with append
-  mode. Combined with lineage-after-data write ordering (see
+- Fallback: parquet directory partitioned by `run_id`/`bucket` with
+  append mode. Combined with lineage-after-data write ordering (see
   pipeline.run_extraction), a rerun after a partial failure skips
   committed buckets and re-writes only uncommitted ones.
 """
@@ -35,15 +35,17 @@ def iceberg_available(spark: SparkSession) -> bool:
     return False
 
 
-def append_data(
-    df: DataFrame, target: str, partition_cols: tuple[str, ...] = ("run_id", "bucket")
-) -> None:
-    """Append rows to the output table/path.
+# physical layout of the data table. The run_id level lets a commit
+# derive its lineage from a PARTITION-PRUNED read-back of exactly the
+# files it just wrote (pipeline.commit_run), and read_output joins
+# committed (run_id, bucket) pairs; the bucket level keeps
+# resume/bucket filters as partition filters.
+PARTITION_COLS = ("run_id", "bucket")
 
-    Default physical layout run_id/bucket: the run_id level lets a
-    commit derive its lineage from a PARTITION-PRUNED read-back of
-    exactly the files it just wrote (pipeline.run_extraction), and the
-    bucket level keeps resume/bucket filters as partition filters."""
+
+def append_data(df: DataFrame, target: str) -> None:
+    """Append rows to the output table/path, partitioned by
+    PARTITION_COLS."""
     spark = df.sparkSession
     if "://" not in target and not target.startswith("/"):
         # catalog table name (Iceberg path)
@@ -51,7 +53,7 @@ def append_data(
             df.writeTo(target).append()
             return
         raise ValueError(f"catalog table {target!r} requires an Iceberg catalog")
-    df.write.mode("append").partitionBy(*partition_cols).parquet(target)
+    df.write.mode("append").partitionBy(*PARTITION_COLS).parquet(target)
 
 
 def append_lineage(df: DataFrame, target: str) -> None:

@@ -1,8 +1,9 @@
 """Continuous transcript ingest (Structured Streaming).
 
-readStream(parquet dir) -> the same extract transform ->
-foreachBatch: per micro-batch, append data + lineage with
-run_id = f"{run_id_prefix}-{epoch}".
+readStream(parquet dir) -> foreachBatch: each micro-batch runs the
+batch pipeline's own pieces — pipeline.extract_df, append_data of all
+statuses, then pipeline.commit_run — under
+run_id = f"{run_id_prefix}-{epoch}-{uuid8}".
 
 Delivery semantics: foreachBatch is AT-LEAST-ONCE (a crash between the
 data/lineage appends and the offset commit replays the epoch). The
@@ -20,15 +21,19 @@ epoch committed.
 
 Turn ranking across micro-batches: a conversation's turns may arrive
 over many epochs (maxFilesPerTrigger bounds each batch), so per-batch
-ranks are OFFSET by the committed max rank per conv_id. The offset
-comes from a compact RANK-STATE table ({out}/rank_state: one row per
-(run_id, conv) touched by an epoch), filtered to committed run_ids —
-NOT from scanning the full output table, whose cost would grow with
-total history instead of batch size. Ordering is therefore
-arrival-epoch-major, (turn_idx, ts, role, tie_key) within an epoch:
-correct whenever turns arrive in epoch order (the append-only ingest
-contract); cross-epoch REORDERING would need an event-time watermark,
-which the reference has no analog of (SURVEY §2.9 — batch-only).
+ranks are OFFSET by the committed max rank per conv_id. The driver
+keeps the committed run_ids and per-conv max ranks in a dict, rebuilt
+once at query (re)start from the committed rows of {out}/turns and
+then advanced by each batch's per-conv turn counts (the batch ranks a
+conv's turns 1..n, failures included, and every status is written, so
+the max committed rank IS the running count). Steady-state per-batch
+work is proportional to the batch: one per-conv count collect and a
+broadcast of that batch's offsets. Driver memory is one (conv_id, int)
+pair per conv ever touched. Ordering is therefore arrival-epoch-major,
+(turn_idx, ts, role, tie_key) within an epoch: correct whenever turns
+arrive in epoch order (the append-only ingest contract); cross-epoch
+REORDERING would need an event-time watermark, which the reference
+has no analog of (SURVEY §2.9 — batch-only).
 
 Watermark/event-time aggregation is intentionally absent: extraction
 is per-row, so there is no cross-row streaming state.
@@ -38,18 +43,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from pdfwf_spark.operators.partitioning import DEFAULT_BUCKETS
 from pdfwf_spark.schemas import TRANSCRIPT_SCHEMA
 
-RANK_STATE_SCHEMA = T.StructType(
+# the only columns the restart rebuild reads back from {out}/turns
+_RANKS_SCHEMA = T.StructType(
     [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("max_rank", T.IntegerType(), False),
+        T.StructField("conv_id", T.StringType(), True),
+        T.StructField("turn_rank", T.IntegerType(), True),
+        T.StructField("run_id", T.StringType(), True),
     ]
 )
 
@@ -63,24 +68,14 @@ def start_ingest(
     n_buckets: int = DEFAULT_BUCKETS,
     n_partitions: int | None = None,
     max_files_per_trigger: int = 16,
-    driver_cache: bool = True,
 ) -> StreamingQuery:
-    """driver_cache=True (default) keeps the committed run_ids and
-    per-conv max ranks in a driver-side dict, REBUILT from disk once
-    at query (re)start and updated incrementally per committed batch —
-    so steady-state per-batch work is proportional to the batch (one
-    distinct-conv collect + a broadcast of that batch's offsets), not
-    to total history (the lineage/rank_state dirs grow one file per
-    epoch; re-listing+scanning them per batch is O(total epochs)).
-    Driver memory is one (conv_id, int) pair per conv EVER TOUCHED;
-    for conv cardinalities beyond driver RAM pass driver_cache=False
-    to keep the fully distributed per-batch joins (plus periodic
-    rank_state compaction, which that path then wants)."""
-    from pdfwf_spark.operators.extract import extract_turns, successes
-    from pdfwf_spark.operators.lineage import lineage_rows, read_lineage
-    from pdfwf_spark.operators.ordering import sort_for_extraction, with_turn_rank
-    from pdfwf_spark.operators.partitioning import salted_repartition, with_bucket
-    from pdfwf_spark.sinks.table import append_data, append_lineage
+    """Start the ingest query; data lands at {out_dir}/turns and
+    lineage at {out_dir}/lineage, exactly as run_extraction writes."""
+    import uuid
+
+    from pdfwf_spark.operators.lineage import read_lineage, read_or_empty
+    from pdfwf_spark.pipeline import commit_run, extract_df
+    from pdfwf_spark.sinks.table import append_data
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
@@ -88,161 +83,69 @@ def start_ingest(
         .parquet(input_dir)
     )
 
-    parts = n_partitions or spark.sparkContext.defaultParallelism
     # committed-state cache; 'ready' flips False on any failed batch so
     # the next attempt rebuilds from disk (disk is the source of truth,
     # the cache only ever mirrors fully committed epochs)
     cache: dict = {"ready": False, "run_ids": set(), "prior": {}}
 
     def _rebuild_cache() -> None:
-        from pdfwf_spark.operators.lineage import read_or_empty
-
         lineage = read_lineage(spark, f"{out_dir}/lineage")
         run_ids = {
             r["run_id"] for r in lineage.select("run_id").distinct().collect()
         }
         prior: dict[str, int] = {}
         if run_ids:
-            rank_state = read_or_empty(
-                spark, f"{out_dir}/rank_state", RANK_STATE_SCHEMA
-            )
+            # committed run_ids only: orphans of a crashed attempt
+            # must not advance the offsets
             committed = spark.createDataFrame(
                 [(i,) for i in sorted(run_ids)], "run_id string"
             )
             rows = (
-                rank_state.join(F.broadcast(committed), "run_id", "left_semi")
+                read_or_empty(spark, f"{out_dir}/turns", _RANKS_SCHEMA)
+                .join(F.broadcast(committed), "run_id", "left_semi")
                 .groupBy("conv_id")
-                .agg(F.max("max_rank").alias("m"))
+                .agg(F.max("turn_rank").alias("m"))
                 .collect()
             )
             prior = {r["conv_id"]: r["m"] for r in rows}
         cache.update(ready=True, run_ids=run_ids, prior=prior)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        import uuid
-
-        from pdfwf_spark.operators.lineage import read_or_empty
-
         epoch_tag = f"{run_id_prefix}-{epoch_id}-"
-        if driver_cache:
-            if not cache["ready"]:
-                _rebuild_cache()
-            if any(r.startswith(epoch_tag) for r in cache["run_ids"]):
-                return  # replayed epoch: already committed -> no-op
-            has_committed = bool(cache["run_ids"])
-        else:
-            lineage = read_lineage(spark, f"{out_dir}/lineage")
-            if (
-                lineage.filter(F.col("run_id").startswith(epoch_tag))
-                .limit(1).count() > 0
-            ):
-                return
-            has_committed = lineage.limit(1).count() > 0
+        if not cache["ready"]:
+            _rebuild_cache()
+        if any(r.startswith(epoch_tag) for r in cache["run_ids"]):
+            return  # replayed epoch: already committed -> no-op
+        counts = {
+            r["conv_id"]: r["count"]
+            for r in batch_df.groupBy("conv_id").count().collect()
+        }
         # fresh run_id per ATTEMPT: a crash between the data append and
         # the lineage commit leaves orphans under a never-committed id
         run_id = epoch_tag + uuid.uuid4().hex[:8]
-
-        staged = sort_for_extraction(
-            salted_repartition(with_bucket(batch_df, n_buckets), parts)
-        )
-        extracted = extract_turns(staged).persist()
-        all_ranked = None
         try:
-            # rank ALL turns (failures occupy ranks too), offset, THEN
-            # filter — matches the batch path, and keeps rank_state
-            # counting failed turns so the next epoch's offset does not
-            # drift from a batch run over the union
-            all_ranked = with_turn_rank(extracted)
-            if has_committed and driver_cache:
-                # offsets for ONLY the convs present in this batch: a
-                # bounded collect of batch conv ids, dict lookups, and
-                # a broadcast-joined literal frame — O(batch convs)
-                batch_convs = [
-                    r["conv_id"]
-                    for r in batch_df.select("conv_id").distinct().collect()
-                ]
-                pairs = [
-                    (c, cache["prior"][c])
-                    for c in batch_convs
-                    if c in cache["prior"]
-                ]
-                if pairs:
-                    prior = spark.createDataFrame(
-                        pairs, "conv_id string, _prior_max int"
-                    )
-                    all_ranked = (
-                        all_ranked.join(F.broadcast(prior), "conv_id", "left")
-                        .withColumn(
-                            "turn_rank",
-                            F.col("turn_rank")
-                            + F.coalesce(F.col("_prior_max"), F.lit(0)),
-                        )
-                        .drop("_prior_max")
-                    )
-            elif has_committed:
-                # distributed path: the rank-state table (one row per
-                # touched (run_id, conv)), restricted to committed
-                # run_ids — never a scan of the full output history
-                rank_state = read_or_empty(
-                    spark, f"{out_dir}/rank_state", RANK_STATE_SCHEMA
-                )
-                committed_ids = lineage.select("run_id").distinct()
-                prior = (
-                    rank_state.join(committed_ids, "run_id", "left_semi")
-                    .groupBy("conv_id")
-                    .agg(F.max("max_rank").alias("_prior_max"))
-                )
-                all_ranked = (
-                    all_ranked.join(prior, "conv_id", "left")
+            ranked = extract_df(batch_df, n_buckets, n_partitions)
+            # offsets for ONLY the convs present in this batch
+            pairs = [(c, cache["prior"][c]) for c in counts if c in cache["prior"]]
+            if pairs:
+                prior = spark.createDataFrame(pairs, "conv_id string, _prior_max int")
+                ranked = (
+                    ranked.join(F.broadcast(prior), "conv_id", "left")
                     .withColumn(
                         "turn_rank",
                         F.col("turn_rank") + F.coalesce(F.col("_prior_max"), F.lit(0)),
                     )
                     .drop("_prior_max")
                 )
-            all_ranked = all_ranked.persist()
-            ranked = successes(all_ranked).withColumn("run_id", F.lit(run_id))
-            append_data(ranked, f"{out_dir}/turns")
-            # rank-state BEFORE lineage: lineage-commit implies the
-            # state rows exist; orphan state rows from a crashed
-            # attempt are excluded by the committed-run_id semi-join.
-            # Max over ALL statuses — failed turns hold their ranks.
-            # Collected once (bounded by this batch's conv count) so the
-            # same rows feed the state write AND the cache update.
-            state_rows = (
-                all_ranked.groupBy("conv_id")
-                .agg(F.max("turn_rank").alias("max_rank"))
-                .collect()
-            )
-            if state_rows:
-                (
-                    spark.createDataFrame(
-                        [(run_id, r["conv_id"], r["max_rank"]) for r in state_rows],
-                        RANK_STATE_SCHEMA,
-                    )
-                    .write.mode("append")
-                    .parquet(f"{out_dir}/rank_state")
-                )
-            # lineage append LAST: its presence marks the epoch committed
-            append_lineage(lineage_rows(extracted, run_id), f"{out_dir}/lineage")
-            if driver_cache:
-                # update the cache ONLY after the lineage commit: a
-                # crash above leaves the cache untouched (and the
-                # except-path below forces a rebuild anyway)
-                cache["run_ids"].add(run_id)
-                for r in state_rows:
-                    cache["prior"][r["conv_id"]] = max(
-                        r["max_rank"], cache["prior"].get(r["conv_id"], 0)
-                    )
+            append_data(ranked.withColumn("run_id", F.lit(run_id)), f"{out_dir}/turns")
+            commit_run(spark, out_dir, run_id)
         except BaseException:
             cache["ready"] = False  # force rebuild-from-disk next batch
             raise
-        finally:
-            # both unpersists in finally: a throw in any append must not
-            # leak executor cache for the life of the streaming query
-            if all_ranked is not None:
-                all_ranked.unpersist()
-            extracted.unpersist()
+        # update the cache ONLY after the lineage commit
+        cache["run_ids"].add(run_id)
+        for c, n in counts.items():
+            cache["prior"][c] = cache["prior"].get(c, 0) + n
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -37,6 +37,34 @@ def test_stream_ingest_matches_batch(spark, tmp_path):
     w = {(r["conv_id"], r["turn_rank"]): r["clean_text"] for r in want.collect()}
     assert g == w
 
+    # one commit protocol: the stream writes the same all-status rows
+    # and the same lineage as a batch run over the same input
+    import json
+
+    from pdfwf_spark.pipeline import run_extraction
+
+    batch_out = str(tmp_path / "batch_out")
+    run_extraction(
+        spark, spark.read.parquet(src), batch_out,
+        n_buckets=8, n_partitions=4, resume=False,
+    )
+
+    def turns(d):
+        return sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in spark.read.parquet(d + "/turns")
+            .drop("run_id", "extract_us", "init_us").collect()
+        )
+
+    def lineage(d):
+        cols = ["bucket", "input_count", "ok_count", "parse_failures",
+                "bytes_in", "bytes_out"]
+        return sorted(tuple(r) for r in spark.read.parquet(d + "/lineage")
+                      .select(*cols).collect())
+
+    assert turns(out) == turns(batch_out)
+    assert lineage(out) == lineage(batch_out)
+
 
 def test_stream_rank_continues_across_micro_batches(spark, tmp_path):
     """A conv spanning multiple micro-batches must get ranks 1..n, not
@@ -88,17 +116,10 @@ def test_stream_rank_continues_across_micro_batches(spark, tmp_path):
     assert sorted(ranks) == [1, 2, 3, 4, 5, 6]          # no collisions
     assert got == [(t, t + 1) for t in range(6)]         # continuation in order
 
-    # per-ATTEMPT run_ids ('{prefix}-{epoch}-{uuid8}') and a compact
-    # rank_state row per (run_id, conv) — the offset source that keeps
-    # per-epoch work proportional to the batch, not total history
+    # per-ATTEMPT run_ids: '{prefix}-{epoch}-{uuid8}'
     run_ids = {r["run_id"] for r in read_output(spark, out).collect()}
     assert all(rid.startswith("stream-") and len(rid.split("-")) == 3
                for rid in run_ids)
-    state = spark.read.parquet(out + "/rank_state").collect()
-    assert {(r["run_id"], r["conv_id"]) for r in state} == {
-        (rid, "conv-x") for rid in run_ids
-    }
-    assert max(r["max_rank"] for r in state) == 6
 
 
 def test_stream_replayed_epoch_is_noop(spark, tmp_path):
@@ -212,7 +233,7 @@ def test_batch_sessions_twin_matches_stateful_semantics(spark):
 
 
 def test_stream_rank_offset_counts_failed_turns(spark, tmp_path):
-    """rank_state max is over ALL statuses: a failed turn at the end of
+    """Rank offsets count ALL statuses: a failed turn at the end of
     an epoch still holds its rank, so the next epoch continues at the
     same position a batch run over the union would assign."""
     import glob as _glob
@@ -249,46 +270,11 @@ def test_stream_rank_offset_counts_failed_turns(spark, tmp_path):
     assert got == {0: 1, 2: 3}
 
 
-def test_stream_rank_continuation_distributed_path(spark, tmp_path):
-    """driver_cache=False keeps the fully distributed per-batch offset
-    joins; rank continuation must be identical to the cached path."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
-    from datetime import datetime
-
-    src = str(tmp_path / "srcd")
-    os.makedirs(src)
-    base = datetime(2025, 1, 1)
-    now = _time.time()
-    for name, turns, mtime in (("a", [0, 1], now), ("b", [2, 3], now + 10)):
-        staging = str(tmp_path / f"staged_{name}")
-        rows = [("conv-d", t, "user", f"turn body {t} words", "", base)
-                for t in turns]
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(staging)
-        part = _glob.glob(staging + "/part-*.parquet")[0]
-        dest = f"{src}/{name}.parquet"
-        _shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-
-    out = str(tmp_path / "outd")
-    q = start_ingest(spark, src, out, str(tmp_path / "ckptd"),
-                     n_buckets=8, n_partitions=4, max_files_per_trigger=1,
-                     driver_cache=False)
-    q.processAllAvailable()
-    q.stop()
-
-    from pdfwf_spark.pipeline import read_output
-
-    got = sorted((r["turn_idx"], r["turn_rank"])
-                 for r in read_output(spark, out).collect())
-    assert got == [(t, t + 1) for t in range(4)]
-
-
 def test_stream_cache_rebuilds_across_query_restarts(spark, tmp_path):
     """Restarting the query (fresh driver cache) must continue rank
-    sequences from the on-disk committed state, not reset them."""
+    sequences from the on-disk committed state, not reset them; rows
+    under a never-committed run_id (a crashed attempt's orphans) must
+    not move the offset."""
     import glob as _glob
     import os
     import shutil as _shutil
@@ -313,6 +299,13 @@ def test_stream_cache_rebuilds_across_query_restarts(spark, tmp_path):
     q1 = start_ingest(spark, src, out, ckpt, n_buckets=8, n_partitions=4)
     q1.processAllAvailable()
     q1.stop()
+
+    # orphan of a crashed attempt: same rows, rank 99, uncommitted run_id
+    (
+        spark.read.parquet(out + "/turns").filter("conv_id='conv-r'")
+        .drop("run_id", "bucket").withColumn("turn_rank", F.lit(99))
+        .write.parquet(out + "/turns/run_id=stream-7-deadbeef/bucket=0")
+    )
 
     # second query instance: brand-new closure, cache must rebuild
     add_file("second", [3, 4])
