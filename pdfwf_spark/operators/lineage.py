@@ -70,7 +70,9 @@ def read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
         )
         cls = (getter() if getter else None) or ""
         if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(exc):
-            return spark.createDataFrame([], schema)
+            # zero partitions: no task runs for it, so no Python worker
+            # starts (a local-list frame starts one per core)
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
         raise
 
 

@@ -4,8 +4,8 @@ ops (union + window; bin + equi-join), never a theta-join.
 
 Not present in the reference (pdfwf has no temporal relations); these
 are the standard event-table companions of a transcript/event
-pipeline (sessionize and windowed aggs live in streaming/; this
-module is their batch join-side).
+pipeline (windowed aggs live in streaming/windows.py; this module is
+their batch join-side).
 
 Scale shapes:
 

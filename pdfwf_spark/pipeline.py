@@ -29,7 +29,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -198,16 +198,20 @@ _READBACK_SCHEMA = T.StructType(
 )
 
 
-def commit_run(spark: SparkSession, out_dir: str, run_id: str) -> list[Row]:
+def commit_run(spark: SparkSession, out_dir: str, run_id: str) -> list[dict]:
     """Commit one run whose data is already under {out_dir}/turns:
     per-bucket lineage from a read-back of the files it wrote, then
     the lineage append — the LAST write, whose presence marks the run
-    committed for read_output and resume. Returns the lineage rows."""
-    lin_rows = lineage_from_written(spark, f"{out_dir}/turns", run_id).collect()
+    committed for read_output and resume. A run that wrote no rows has
+    no bucket to commit and appends nothing. Returns the lineage rows."""
+    lin = lineage_from_written(spark, f"{out_dir}/turns", run_id).toPandas()
     # <= n_buckets rows land on the driver; re-wrapping them keeps the
-    # lineage append from re-scanning the read-back a second time
-    append_lineage(spark.createDataFrame(lin_rows, LINEAGE_SCHEMA), f"{out_dir}/lineage")
-    return lin_rows
+    # lineage append from re-scanning the read-back a second time, and
+    # a non-empty pandas frame goes back to the JVM as Arrow batches, so
+    # the append starts no Python worker
+    if len(lin):
+        append_lineage(spark.createDataFrame(lin, LINEAGE_SCHEMA), f"{out_dir}/lineage")
+    return lin.to_dict("records")
 
 
 def lineage_from_written(spark: SparkSession, data_path: str, run_id: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""JSONL shard sink/source — the reference's literal output surface.
+"""JSONL shard sink — the reference's literal output surface.
 
 The reference appends one JSONL shard per parser-instance UUID
 (pdfwf/convert.py:65-71) and re-shards them to exactly-N-lines files
@@ -9,52 +9,23 @@ time — no offline rebalance pass. The Iceberg/parquet table sink
 (sinks/table.py) remains the engine's primary contract; this module
 exists so reference users keep their downstream JSONL consumers.
 
-Also carries the Spark rendering of the reference's offline
-converter `examples/convert_parquet_to_jsonl.py:33-99` (S3): a
-driver-side pandas row loop there, one declarative re-write here.
+jobs/export_jsonl.py is its caller: it exports the committed view of
+an extraction output (pipeline.read_output), so rows of uncommitted
+runs never reach a shard. Read shards back with
+`spark.read.schema(...).json(path)`; pass the schema, since inference
+is a full extra pass over the data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def write_jsonl(
-    df: DataFrame, out_dir: str, lines_per_file: int | None = None
-) -> None:
+def write_jsonl(df: DataFrame, out_dir: str, lines_per_file: int) -> None:
     """Write `df` as JSONL shards (one file per task; each row one
     JSON object). `lines_per_file` caps lines per shard via
     maxRecordsPerFile — the write-time twin of the reference's
     balance.py re-sharder, with no second pass over the data."""
-    writer = df.write.mode("overwrite")
-    if lines_per_file is not None:
-        if lines_per_file <= 0:
-            raise ValueError(f"lines_per_file must be positive, got {lines_per_file}")
-        writer = writer.option("maxRecordsPerFile", lines_per_file)
-    writer.json(out_dir)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read JSONL shards. Pass an explicit schema in production —
-    schema inference is a full extra pass over 100 TB."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def parquet_to_jsonl(
-    spark: SparkSession,
-    parquet_path: str,
-    out_dir: str,
-    lines_per_file: int = 1000,
-    text_field: str | None = None,
-) -> None:
-    """Reference S3 utility (convert_parquet_to_jsonl.py:33-99)
-    re-expressed: parquet in, line-bounded JSONL shards out, keeping
-    only `text_field` (+ everything else when None) — fully
-    distributed, no driver row loop."""
-    df = spark.read.parquet(parquet_path)
-    if text_field is not None:
-        df = df.select(text_field)
-    write_jsonl(df, out_dir, lines_per_file)
+    if lines_per_file <= 0:
+        raise ValueError(f"lines_per_file must be positive, got {lines_per_file}")
+    df.write.mode("overwrite").option("maxRecordsPerFile", lines_per_file).json(out_dir)

@@ -19,6 +19,10 @@ batch body makes the replay safe twice over:
 Lineage append is the LAST write of the batch; its presence marks the
 epoch committed.
 
+Driver-built frames (the committed run_ids, the per-conv offsets) are
+pandas frames, which reach the JVM as Arrow batches: joining them
+starts no Python worker.
+
 Turn ranking across micro-batches: a conversation's turns may arrive
 over many epochs (maxFilesPerTrigger bounds each batch), so per-batch
 ranks are OFFSET by the committed max rank per conv_id. The driver
@@ -73,6 +77,8 @@ def start_ingest(
     lineage at {out_dir}/lineage, exactly as run_extraction writes."""
     import uuid
 
+    import pandas as pd
+
     from pdfwf_spark.operators.lineage import read_lineage, read_or_empty
     from pdfwf_spark.pipeline import commit_run, extract_df
     from pdfwf_spark.sinks.table import append_data
@@ -98,7 +104,7 @@ def start_ingest(
             # committed run_ids only: orphans of a crashed attempt
             # must not advance the offsets
             committed = spark.createDataFrame(
-                [(i,) for i in sorted(run_ids)], "run_id string"
+                pd.DataFrame({"run_id": sorted(run_ids)}), "run_id string"
             )
             rows = (
                 read_or_empty(spark, f"{out_dir}/turns", _RANKS_SCHEMA)
@@ -128,7 +134,10 @@ def start_ingest(
             # offsets for ONLY the convs present in this batch
             pairs = [(c, cache["prior"][c]) for c in counts if c in cache["prior"]]
             if pairs:
-                prior = spark.createDataFrame(pairs, "conv_id string, _prior_max int")
+                prior = spark.createDataFrame(
+                    pd.DataFrame(pairs, columns=["conv_id", "_prior_max"]),
+                    "conv_id string, _prior_max int",
+                )
                 ranked = (
                     ranked.join(F.broadcast(prior), "conv_id", "left")
                     .withColumn(

@@ -334,70 +334,6 @@ def test_boilerplate_strip_broadcasts_blocklist_never_shuffles_text(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed by the same key: the equi-join plans with
-    ZERO exchange (the write paid the shuffle once); a raw path read
-    of the same files loses the guarantee and shuffles again."""
-    from pdfwf_spark.sinks.bucketed import read_bucketed, write_bucketed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    left = docs.select("doc_id", "source")
-    right = docs.select("doc_id", "n_chars")
-    write_bucketed(left, "bk_left", "doc_id", 4, sort_cols="doc_id",
-                   path=str(tmp_path / "bk_left"))
-    write_bucketed(right, "bk_right", "doc_id", 4, sort_cols="doc_id",
-                   path=str(tmp_path / "bk_right"))
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = read_bucketed(spark, "bk_left").join(
-                read_bucketed(spark, "bk_right"), "doc_id"
-            )
-            plan = _plan(j)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan
-            assert j.count() == docs.count()
-
-            # control: identical files read by PATH shuffle both sides
-            raw = spark.read.parquet(str(tmp_path / "bk_left")).join(
-                spark.read.parquet(str(tmp_path / "bk_right")), "doc_id"
-            )
-            assert "Exchange" in _plan(raw)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
-def test_bucketed_groupby_without_exchange(spark, tmp_path):
-    """groupBy on the bucket key aggregates in place — no exchange."""
-    from pdfwf_spark.sinks.bucketed import read_bucketed, write_bucketed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    write_bucketed(docs.select("doc_id", "n_chars"), "bk_agg", "doc_id", 4,
-                   path=str(tmp_path / "bk_agg"))
-    try:
-        agg = read_bucketed(spark, "bk_agg").groupBy("doc_id").agg(
-            F.sum("n_chars").alias("c")
-        )
-        assert "Exchange" not in _plan(agg)
-        assert agg.count() == docs.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_agg")
-
-
-def test_write_bucketed_guards(spark):
-    from pdfwf_spark.sinks.bucketed import write_bucketed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    with pytest.raises(ValueError, match="absent"):
-        write_bucketed(docs, "bk_bad", "nope", 4)
-    with pytest.raises(ValueError, match="n_buckets"):
-        write_bucketed(docs, "bk_bad", "doc_id", 0)
-
-
 def test_assemble_context_chunked_partitions_on_fine_key(spark, transcripts):
     """Skew contract: every exchange in the chunked path carries the
     FINE (conv_id, _chunk) key — a mega-conversation never pins one

@@ -1,50 +1,29 @@
-"""S4 — markdown-dir source tests (convert_markdown_to_jsonl.py:31-79
-semantics: wholetext read, stem pairing, orphan drop)."""
+"""JSONL output surface (reference convert.py:65-71 shards,
+balance.py:30-114 line cap): the sink's round trip and line cap, and
+jobs/export_jsonl.py exporting only the committed view of an
+extraction output."""
 
 from __future__ import annotations
 
-from pdfwf_spark.sources import pair_with_sources, read_markdown_dir
+import glob
+import json
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_read_markdown_dir_wholetext(spark, tmp_path):
-    (tmp_path / "sub").mkdir()
-    (tmp_path / "a.md").write_text("# Title A\n\nbody A line 1\nline 2\n")
-    (tmp_path / "sub" / "b.md").write_text("body B")
-    (tmp_path / "ignored.txt").write_text("nope")
-
-    md = read_markdown_dir(spark, str(tmp_path))
-    rows = {r["stem"]: r for r in md.collect()}
-    assert set(rows) == {"a", "b"}  # recursive, .txt filtered out
-    assert rows["a"]["text"] == "# Title A\n\nbody A line 1\nline 2\n"  # wholetext
-    assert rows["b"]["md_path"].endswith("/sub/b.md")
-
-
-def test_pair_with_sources_by_stem(spark, tmp_path):
-    (tmp_path / "a.md").write_text("text a")
-    (tmp_path / "orphan.md").write_text("no source pdf")
-    md = read_markdown_dir(spark, str(tmp_path))
-    sources = spark.createDataFrame(
-        [("/data/pdfs/a.pdf",), ("/data/pdfs/unmatched.pdf",)], "path string"
-    )
-    paired = pair_with_sources(md, sources).collect()
-    assert len(paired) == 1
-    assert paired[0]["path"] == "/data/pdfs/a.pdf"
-    assert paired[0]["text"] == "text a"
-
-
-def test_markdown_dir_decodes_spaced_filenames(spark, tmp_path):
-    (tmp_path / "my paper.md").write_text("spaced body")
-    (tmp_path / "a+b.md").write_text("plus body")
-    md = read_markdown_dir(spark, str(tmp_path))
-    stems = {r["stem"]: r["text"] for r in md.collect()}
-    assert stems == {"my paper": "spaced body", "a+b": "plus body"}
+def _shard_lines(out: str) -> list[list[dict]]:
+    shards = []
+    for f in sorted(glob.glob(f"{out}/part-*.json")):
+        with open(f) as fh:
+            shards.append([json.loads(line) for line in fh if line.strip()])
+    return shards
 
 
 def test_jsonl_sink_roundtrip_and_line_cap(spark, tmp_path):
-    import glob
-    import json
-
-    from pdfwf_spark.sinks.jsonl import read_jsonl, write_jsonl
+    from pdfwf_spark.sinks.jsonl import write_jsonl
 
     df = spark.createDataFrame(
         [(i, f"text {i}") for i in range(100)], "doc_id long, text string"
@@ -52,27 +31,57 @@ def test_jsonl_sink_roundtrip_and_line_cap(spark, tmp_path):
     out = str(tmp_path / "shards")
     write_jsonl(df, out, lines_per_file=10)
 
-    files = glob.glob(f"{out}/part-*.json")
-    assert files
-    for f in files:  # write-time re-shard: every shard <= 10 lines
-        with open(f) as fh:
-            lines = [json.loads(line) for line in fh if line.strip()]
+    shards = _shard_lines(out)
+    assert shards
+    for lines in shards:  # write-time re-shard: every shard <= 10 lines
         assert 0 < len(lines) <= 10
         assert set(lines[0]) == {"doc_id", "text"}
 
-    back = read_jsonl(spark, out, schema="doc_id long, text string")
+    back = spark.read.schema("doc_id long, text string").json(out)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_parquet_to_jsonl_utility(spark, tmp_path):
-    from pdfwf_spark.sinks.jsonl import parquet_to_jsonl, read_jsonl
+def test_export_jsonl_job_exports_committed_rows(spark, tmp_path):
+    """jobs/export_jsonl.py driven as a subprocess: the shards hold
+    exactly read_output's rows, none of an uncommitted run, and at most
+    --lines-per-file lines each."""
+    from pyspark.sql import functions as F
 
-    src = str(tmp_path / "in.parquet")
-    spark.createDataFrame(
-        [(i, f"t{i}", i * 2) for i in range(20)], "doc_id long, text string, x long"
-    ).write.parquet(src)
+    from pdfwf_spark.fixtures.gen import gen_transcripts
+    from pdfwf_spark.pipeline import read_output, run_extraction
+    from pdfwf_spark.schemas import TRANSCRIPT_SCHEMA
+
+    rows = [{k: v for k, v in r.items() if not k.startswith("_")}
+            for r in gen_transcripts(12, seed=5, mega_every=0)]
     out = str(tmp_path / "out")
-    parquet_to_jsonl(spark, src, out, lines_per_file=7, text_field="text")
-    back = read_jsonl(spark, out, schema="text string")
-    assert back.columns == ["text"]
-    assert back.count() == 20
+    run_extraction(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), out,
+                   n_buckets=4, n_partitions=4)
+    committed = read_output(spark, out)
+    # an attempt that crashed before its lineage commit: data rows under
+    # a run_id that lineage never names
+    orphan = "orphan-0badc0de"
+    (committed.drop("run_id")
+     .withColumn("clean_text", F.concat(F.lit("ORPHAN "), F.col("clean_text")))
+     .write.partitionBy("bucket").parquet(f"{out}/turns/run_id={orphan}"))
+
+    dest = str(tmp_path / "jsonl")
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "export_jsonl.py"),
+         "--output", out, "--dest", dest, "--lines-per-file", "7"],
+        capture_output=True, text=True, env=dict(os.environ, PYTHONPATH=REPO),
+        timeout=240,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+
+    shards = _shard_lines(dest)
+    assert shards and all(0 < len(lines) <= 7 for lines in shards)
+    exported = [r for lines in shards for r in lines]
+    assert not [r for r in exported if r["run_id"] == orphan]
+
+    def canon(df):
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+                      for r in df.collect())
+
+    expect = canon(read_output(spark, out))
+    assert len(exported) == len(expect) > 0
+    assert canon(spark.read.schema(committed.schema).json(dest)) == expect

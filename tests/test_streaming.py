@@ -155,83 +155,6 @@ def test_stream_replayed_epoch_is_noop(spark, tmp_path):
     assert not os.path.exists(out + "/turns")
 
 
-def test_stateful_session_operator(spark, tmp_path):
-    """applyInPandasWithState gap sessionization: gap-closed sessions
-    emit immediately; the trailing open session closes when the
-    event-time watermark passes last_ts + gap."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
-    from datetime import datetime, timedelta
-
-    from pdfwf_spark.streaming.sessions import start_session_agg
-
-    src = str(tmp_path / "ssrc")
-    os.makedirs(src)
-    t0 = datetime(2025, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        staging = str(tmp_path / f"sstage_{name}")
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(staging)
-        part = _glob.glob(staging + "/part-*.parquet")[0]
-        dest = f"{src}/{name}.parquet"
-        _shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-
-    now = _time.time()
-    # conv-a: two turns 10s apart, then a 2h gap -> first session closes by gap
-    write_file("f1", [
-        ("conv-a", 0, "user", "t0", "", t0),
-        ("conv-a", 1, "user", "t1", "", t0 + timedelta(seconds=10)),
-        ("conv-a", 2, "user", "t2", "", t0 + timedelta(hours=2)),
-    ], now)
-    # conv-b much later: advances the watermark past conv-a's open session
-    write_file("f2", [("conv-b", 0, "user", "x", "", t0 + timedelta(days=2))], now + 10)
-    # third batch so the timeout fires after the watermark advanced
-    write_file("f3", [("conv-b", 1, "user", "y", "", t0 + timedelta(days=2, seconds=5))],
-               now + 20)
-
-    out = str(tmp_path / "sout")
-    q = start_session_agg(
-        spark, src, out, str(tmp_path / "sckpt"),
-        gap_s=60, watermark="10 seconds", max_files_per_trigger=1,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.read.parquet(out).collect()
-    by_key = {(r["conv_id"], r["closed_by"], r["n_turns"]): r for r in got}
-    # gap-closed: the 2-turn opening segment of conv-a
-    gap_row = by_key[("conv-a", "gap", 2)]
-    assert gap_row["session_start"] == t0
-    assert gap_row["session_end"] == t0 + timedelta(seconds=10)
-    # timeout-closed: conv-a's trailing 1-turn segment after watermark passed
-    assert ("conv-a", "timeout", 1) in by_key
-
-
-def test_batch_sessions_twin_matches_stateful_semantics(spark):
-    """batch_sessions (the SQL twin) reproduces the stateful operator's
-    gap-split segments on the same data."""
-    from datetime import datetime, timedelta
-
-    from pdfwf_spark.streaming.sessions import batch_sessions
-
-    t0 = datetime(2025, 1, 1, 12, 0, 0)
-    rows = [
-        ("conv-a", 0, "user", "t0", "", t0),
-        ("conv-a", 1, "user", "t1", "", t0 + timedelta(seconds=10)),
-        ("conv-a", 2, "user", "t2", "", t0 + timedelta(hours=2)),
-        ("conv-b", 0, "user", "x", "", t0),
-    ]
-    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
-    got = {(r["conv_id"], r["session_no"]): (r["session_start"], r["session_end"], r["n_turns"])
-           for r in batch_sessions(df, gap_s=60).collect()}
-    assert got[("conv-a", 1)] == (t0, t0 + timedelta(seconds=10), 2)
-    assert got[("conv-a", 2)] == (t0 + timedelta(hours=2), t0 + timedelta(hours=2), 1)
-    assert got[("conv-b", 1)] == (t0, t0, 1)
-
-
 def test_stream_rank_offset_counts_failed_turns(spark, tmp_path):
     """Rank offsets count ALL statuses: a failed turn at the end of
     an epoch still holds its rank, so the next epoch continues at the
@@ -318,141 +241,6 @@ def test_stream_cache_rebuilds_across_query_restarts(spark, tmp_path):
     got = sorted((r["turn_idx"], r["turn_rank"])
                  for r in read_output(spark, out).collect())
     assert got == [(t, t + 1) for t in range(5)]
-
-
-def test_incremental_dedup_across_micro_batches(spark, tmp_path):
-    """Duplicates must be dropped WITHIN a batch (min-id keeper) and
-    ACROSS batches (digest state table): a doc re-arriving in a later
-    epoch never lands twice."""
-    from pdfwf_spark.streaming.dedup import start_incremental_dedup
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-
-    # epoch-ish file 1: in-batch dup (ids 0,1 same text)
-    spark.createDataFrame(
-        [(0, "alpha body"), (1, "alpha body"), (2, "beta body")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    q = start_incremental_dedup(spark, src, out, max_files_per_trigger=1)
-    q.awaitTermination()
-
-    # later file: replay of 'alpha body' + one new doc
-    spark.createDataFrame(
-        [(7, "alpha body"), (8, "gamma body")], "doc_id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    q2 = start_incremental_dedup(spark, src, out, max_files_per_trigger=1)
-    q2.awaitTermination()
-
-    docs = spark.read.parquet(f"{out}/docs")
-    kept = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert kept == {0: "alpha body", 2: "beta body", 8: "gamma body"}
-
-    seen = spark.read.parquet(f"{out}/seen")
-    assert seen.select("digest").distinct().count() == 3
-
-
-def test_seen_state_compaction_preserves_dedup(spark, tmp_path):
-    """Compacting the digest table between runs must shrink it to one
-    row per digest in a bounded file set WITHOUT forgetting history:
-    re-ingesting already-seen content after compaction appends
-    nothing."""
-    from pdfwf_spark.streaming.dedup import (
-        compact_seen_state,
-        start_incremental_dedup,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-
-    # several one-file epochs -> several state appends, with a
-    # cross-epoch duplicate so (digest, epoch) rows exceed digests
-    for i, text in enumerate(["alpha", "beta", "alpha", "gamma"]):
-        spark.createDataFrame(
-            [(10 * i, text)], "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(src)
-    q = start_incremental_dedup(spark, src, out, max_files_per_trigger=1)
-    q.awaitTermination()
-
-    stats = compact_seen_state(spark, out, n_buckets=2)
-    assert stats["rows_after"] == 3  # distinct digests
-    assert stats["rows_after"] <= stats["rows_before"]
-    assert stats["files_after"] <= 2
-    seen = spark.read.parquet(f"{out}/seen")
-    assert seen.count() == 3
-    assert set(seen.columns) == {"digest", "epoch"}
-
-    # post-compaction run: replays + one genuinely new doc
-    spark.createDataFrame(
-        [(99, "alpha"), (100, "delta")], "doc_id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-    q2 = start_incremental_dedup(spark, src, out, max_files_per_trigger=1)
-    q2.awaitTermination()
-
-    kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/docs").collect()}
-    assert kept == {0, 10, 30, 100}  # alpha replay blocked, delta kept
-
-
-def test_incremental_dedup_auto_compaction(spark, tmp_path):
-    """compact_every=N must compact INSIDE the stream (foreachBatch
-    serializes callbacks, so the swap is safe) without changing what
-    gets deduped: same kept docs as an uncompacted run, and the seen
-    table ends bounded at the compaction bucket count instead of one
-    file per epoch."""
-    import glob
-
-    from pdfwf_spark.streaming.dedup import start_incremental_dedup
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-
-    # 4 single-file epochs: dup within, dup across, fresh content
-    epochs = [
-        [(0, "alpha body"), (1, "alpha body")],
-        [(2, "beta body")],
-        [(3, "alpha body"), (4, "gamma body")],
-        [(5, "beta body"), (6, "delta body")],
-    ]
-    for rows in epochs:
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    q = start_incremental_dedup(
-        spark, src, out, max_files_per_trigger=1, compact_every=2
-    )
-    q.awaitTermination()
-
-    docs = spark.read.parquet(f"{out}/docs")
-    kept = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert kept == {
-        0: "alpha body", 2: "beta body", 4: "gamma body", 6: "delta body"
-    }
-    seen = spark.read.parquet(f"{out}/seen")
-    assert seen.count() == seen.select("digest").distinct().count() == 4
-    # last compaction fired at epoch 2; epoch-3 appends sit on top of
-    # the 16 compacted buckets — far fewer than an uncompacted history
-    # and, crucially, re-compactable: a replayed epoch after compaction
-    # still appends nothing
-    spark.createDataFrame(
-        [(9, "alpha body")], "doc_id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-    q2 = start_incremental_dedup(
-        spark, src, out, max_files_per_trigger=1, compact_every=1
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(f"{out}/docs").count() == 4  # nothing new
-    n_files = len(glob.glob(f"{out}/seen/*.parquet"))
-    assert n_files <= 16  # fully compacted on the final epoch
-
-
-def test_seen_state_compaction_empty(spark, tmp_path):
-    from pdfwf_spark.streaming.dedup import compact_seen_state
-
-    stats = compact_seen_state(spark, str(tmp_path / "never_ran"), n_buckets=2)
-    assert stats["rows_before"] == 0 and stats["rows_after"] == 0
 
 
 def test_windowed_turn_stats_watermark_drops_late(spark, tmp_path):
@@ -549,104 +337,3 @@ def test_windowed_turn_stats_batch_twin(spark):
         for r in windowed_turn_stats(df).collect()
     }
     assert rows == {(0, "user"): (3, 10), (30, "user"): (1, 4)}
-
-
-def test_streaming_context_matches_batch_twin(spark, tmp_path):
-    """In-order feed across micro-batches: streaming rolling-context
-    output equals operators/context.assemble_context on the union."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
-    from datetime import datetime, timedelta
-
-    from pdfwf_spark.streaming.context import start_context_assembly
-
-    src = str(tmp_path / "csrc")
-    os.makedirs(src)
-    t0 = datetime(2025, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        staging = str(tmp_path / f"cstage_{name}")
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(staging)
-        part = _glob.glob(staging + "/part-*.parquet")[0]
-        dest = f"{src}/{name}.parquet"
-        _shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-
-    def turn(conv, i, role, text):
-        return (conv, i, role, text, "", t0 + timedelta(seconds=7 * i))
-
-    b1 = [turn("a", 0, "user", "q one"), turn("a", 1, "assistant", "a one"),
-          turn("b", 0, "user", "hello")]
-    b2 = [turn("a", 2, "user", "q two"), turn("a", 3, "assistant", "a two"),
-          turn("a", 4, "user", "q three"), turn("b", 1, "assistant", "hi")]
-    now = _time.time()
-    write_file("f1", b1, now)
-    write_file("f2", b2, now + 10)
-
-    out = str(tmp_path / "cout")
-    q = start_context_assembly(
-        spark, src, out, str(tmp_path / "cckpt"),
-        k=2, ttl_s=10**6, max_files_per_trigger=1,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = {(r["conv_id"], r["turn_idx"]): (r["context"], r["n_ctx"], r["late"])
-           for r in spark.read.parquet(out).collect()}
-    assert len(got) == len(b1) + len(b2)
-    assert not any(late for (_, _, late) in got.values())
-
-    from pdfwf_spark.operators.context import assemble_context
-
-    batch = spark.createDataFrame(b1 + b2, TRANSCRIPT_SCHEMA)
-    want = {(r["conv_id"], r["turn_idx"]): r["context"]
-            for r in assemble_context(batch, k=2).collect()}
-    assert {kk: v[0] for kk, v in got.items()} == want
-    # ring carries at most k turns: n_ctx is capped
-    assert got[("a", 4)][1] == 2 and got[("a", 0)][1] == 0
-
-
-def test_streaming_context_late_turn_flagged(spark, tmp_path):
-    """A turn arriving after a newer turn was processed is flagged
-    late and still gets the in-range context the ring can offer."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
-    from datetime import datetime, timedelta
-
-    from pdfwf_spark.streaming.context import start_context_assembly
-
-    src = str(tmp_path / "lsrc")
-    os.makedirs(src)
-    t0 = datetime(2025, 1, 1, 12, 0, 0)
-
-    def write_file(name, rows, mtime):
-        staging = str(tmp_path / f"lstage_{name}")
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(staging)
-        part = _glob.glob(staging + "/part-*.parquet")[0]
-        dest = f"{src}/{name}.parquet"
-        _shutil.copy(part, dest)
-        os.utime(dest, (mtime, mtime))
-
-    def turn(conv, i, role, text):
-        return (conv, i, role, text, "", t0 + timedelta(seconds=7 * i))
-
-    now = _time.time()
-    write_file("f1", [turn("a", 0, "user", "t0"), turn("a", 2, "user", "t2")], now)
-    write_file("f2", [turn("a", 1, "user", "t1")], now + 10)  # late
-
-    out = str(tmp_path / "lout")
-    q = start_context_assembly(
-        spark, src, out, str(tmp_path / "lckpt"),
-        k=2, ttl_s=10**6, max_files_per_trigger=1,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["turn_idx"]: r for r in spark.read.parquet(out).collect()}
-    assert got[1]["late"] is True
-    assert got[1]["context"] == "user: t0"  # only turns below idx 1
-    assert got[2]["late"] is False and got[2]["context"] == "user: t0"
