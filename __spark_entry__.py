@@ -996,9 +996,10 @@ def _q_mm_media_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS (connected components over LSH-verified
     near-dup pairs) + keeper per cluster — the step between candidate
-    pairs and actually dropping duplicates. Min-label propagation,
-    O(component diameter) rounds; oracle is a DuckDB recursive CTE
-    computing min-reachable-id over the same verified-pairs edges."""
+    pairs and actually dropping duplicates. Large-star/small-star
+    alternation, O(log n) rounds on any graph shape; oracle is a DuckDB
+    recursive CTE computing min-reachable-id over the same
+    verified-pairs edges."""
     from pdfwf_spark.operators.dedup import dup_clusters, lsh_verified_neardups
 
     docs = _t(spark, sf_dir, "documents")
@@ -1085,15 +1086,10 @@ def _q_dedup_lsh_pairs_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same component semantics as dedup_clusters, computed by the
-    O(log n)-round large-star/small-star alternation instead of
-    O(diameter) label propagation — both variants must reproduce the
-    identical recursive-CTE oracle."""
-    from pdfwf_spark.operators.dedup import dup_clusters_star, lsh_verified_neardups
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = lsh_verified_neardups(docs, threshold=0.01)
-    return dup_clusters_star(docs, pairs)
+    """The large-star/small-star components under the name they were
+    first oracled by: dup_clusters now IS that algorithm, so this runs
+    dedup_clusters' plan against the identical recursive-CTE oracle."""
+    return _q_dedup_clusters(spark, sf_dir)
 
 
 def _q_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4140,7 +4136,6 @@ def oracle_sql() -> dict[str, str]:
             FROM tok GROUP BY doc_id
         """,
     }
-    # two implementations, one semantics: the star variant must
-    # reproduce the identical component assignment
+    # the large-star/small-star query runs dedup_clusters' plan
     out["dedup_clusters_star"] = out["dedup_clusters"]
     return out

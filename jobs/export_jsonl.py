@@ -29,13 +29,11 @@ def main(argv: list[str] | None = None) -> None:
                     help="max lines per shard (default 1000)")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from pdfwf_spark.pipeline import read_output
+    from pdfwf_spark.session import build_session
     from pdfwf_spark.sinks.jsonl import write_jsonl
 
-    spark = SparkSession.builder.appName("pdfwf_spark_export_jsonl").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_export_jsonl")
     try:
         write_jsonl(read_output(spark, args.output), args.dest, args.lines_per_file)
     finally:

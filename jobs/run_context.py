@@ -59,8 +59,6 @@ def main(argv: list[str] | None = None) -> None:
         max_tool_milli=pick("max_tool_milli", args.max_tool_milli, None),
     )
 
-    from pyspark.sql import SparkSession
-
     from pdfwf_spark.config import read_input
     from pdfwf_spark.curation import curate_conversations
     from pdfwf_spark.operators.context import (
@@ -68,9 +66,9 @@ def main(argv: list[str] | None = None) -> None:
         prompt_response_pairs,
         render_conversations,
     )
+    from pdfwf_spark.session import build_session
 
-    spark = SparkSession.builder.appName("pdfwf_spark_context").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_context")
 
     turns = read_input(spark, cfg.input)
     floored = (

@@ -31,8 +31,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--text-col", default=None)
     ap.add_argument("--near-dup-threshold", type=float, default=None)
     ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--cluster-algorithm", choices=("labelprop", "star"),
-                    default=None)
     ap.add_argument("--top2gram-max", type=int, default=None)
     ap.add_argument("--no-repetition-filter", action="store_true")
     ap.add_argument("--quality-min", type=int, default=None)
@@ -68,8 +66,6 @@ def main(argv: list[str] | None = None) -> None:
             None if args.no_dedup
             else pick("near_dup_threshold", args.near_dup_threshold, 0.05)
         ),
-        cluster_algorithm=pick("cluster_algorithm", args.cluster_algorithm,
-                               "labelprop"),
         top2gram_max=(
             None if args.no_repetition_filter
             else pick("top2gram_max", args.top2gram_max, 150)
@@ -86,13 +82,11 @@ def main(argv: list[str] | None = None) -> None:
         assign_splits=args.assign_splits or yaml_vals.get("assign_splits", False),
     )
 
-    from pyspark.sql import SparkSession
-
     from pdfwf_spark.config import read_input
     from pdfwf_spark.curation import curate
+    from pdfwf_spark.session import build_session
 
-    spark = SparkSession.builder.appName("pdfwf_spark_curate").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_curate")
 
     docs = read_input(spark, cfg.input)
 

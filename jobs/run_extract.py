@@ -82,12 +82,10 @@ def main(argv: list[str] | None = None) -> None:
         rebalance_rows=pick("rebalance_rows", args.rebalance_rows, None),
     )
 
-    from pyspark.sql import SparkSession
-
     from pdfwf_spark.pipeline import run_extraction
+    from pdfwf_spark.session import build_session
 
-    spark = SparkSession.builder.appName("pdfwf_spark_extract").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_extract")
 
     from pdfwf_spark.config import read_input
 

@@ -50,15 +50,14 @@ def main(argv: list[str] | None = None) -> None:
         text_col=pick("text_col", args.text_col, "text"),
     )
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from pdfwf_spark.config import read_input
     from pdfwf_spark.operators.packing import pack_concat, pack_greedy, pack_stats
     from pdfwf_spark.operators.textstats import token_count
+    from pdfwf_spark.session import build_session
 
-    spark = SparkSession.builder.appName("pdfwf_spark_pack").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_pack")
 
     docs = read_input(spark, cfg.input).select(
         F.col(cfg.id_col), token_count(F.col(cfg.text_col)).alias("n_tokens")

@@ -60,15 +60,13 @@ def main(argv: list[str] | None = None) -> None:
         salt=pick("salt", args.salt, "dsir"),
     )
 
-    from pyspark.sql import SparkSession
-
     from pdfwf_spark.config import read_input
     from pdfwf_spark.operators.selection import (
         dsir_fit, dsir_scores, dsir_select,
     )
+    from pdfwf_spark.session import build_session
 
-    spark = SparkSession.builder.appName("pdfwf_spark_select").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(app_name="pdfwf_spark_select")
 
     pool = read_input(spark, cfg.input)
     target = (

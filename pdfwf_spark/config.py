@@ -90,7 +90,6 @@ class CurateConfig:
     id_col: str = "doc_id"
     text_col: str = "text"
     near_dup_threshold: float | None = 0.05
-    cluster_algorithm: str = "labelprop"
     #: hot band-bucket handling for the LSH candidate pass: "drop"
     #: (bounded work, recall cliff inside dropped buckets) or "salt"
     #: (split into ceil(n/cap) md5 sub-buckets — bounded work, smooth
@@ -114,10 +113,6 @@ class CurateConfig:
     def __post_init__(self) -> None:
         if not self.input or not self.output:
             raise ValueError("config requires non-empty 'input' and 'output'")
-        if self.cluster_algorithm not in ("labelprop", "star"):
-            raise ValueError(
-                f"cluster_algorithm must be labelprop|star, got {self.cluster_algorithm!r}"
-            )
         if self.keeper_policy not in ("min_id", "longest"):
             raise ValueError(
                 f"keeper_policy must be min_id|longest, got {self.keeper_policy!r}"

@@ -8,10 +8,10 @@ individually toggleable. The driver query `curate_full`
 (__spark_entry__.py) is a fixed-parameter instance of this pipeline,
 hash-verified against a single DuckDB oracle.
 
-Scale shape: one LSH-banded candidate pass + O(diameter | log n)
-component rounds for the dedup stage; everything downstream is
-scan-side codegen except the top-2-gram mode (two map-side-combining
-aggregates). Nothing quadratic, nothing collected to the driver.
+Scale shape: one LSH-banded candidate pass + O(log n) large-star /
+small-star component rounds (dup_clusters) for the dedup stage;
+everything downstream is scan-side codegen except the top-2-gram mode
+(two map-side-combining aggregates). Nothing quadratic, nothing collected to the driver.
 """
 
 from __future__ import annotations
@@ -47,7 +47,6 @@ def curate(
     """
     from pdfwf_spark.operators.dedup import (
         dup_clusters,
-        dup_clusters_star,
         lsh_verified_neardups,
     )
     from pdfwf_spark.operators.partitioning import repartition_for_scan
@@ -85,10 +84,7 @@ def curate(
             out, text_col=text_col, id_col=id_col,
             threshold=cfg.near_dup_threshold, cap_mode=cfg.cap_mode,
         )
-        cluster_fn = (
-            dup_clusters_star if cfg.cluster_algorithm == "star" else dup_clusters
-        )
-        clusters = cluster_fn(out, pairs, id_col=id_col)
+        clusters = dup_clusters(out, pairs, id_col=id_col)
         if cfg.keeper_policy == "longest":
             from pdfwf_spark.operators.dedup import cluster_keepers_by_score
             from pdfwf_spark.operators.textstats import token_count

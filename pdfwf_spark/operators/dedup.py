@@ -616,8 +616,8 @@ def lsh_verified_neardups(
 
 
 def _is_integral_id(docs: DataFrame, id_col: str) -> bool:
-    """Both component algorithms order labels numerically (cluster_id
-    = component-min id) and cast ids to long: a string/uuid id column
+    """dup_clusters orders labels numerically (cluster_id =
+    component-min id) and casts ids to long: a string/uuid id column
     would cast to all-NULL labels and silently mark every doc a
     non-keeper — corpus-deleting. Non-integral ids therefore route
     through the md5-surrogate wrapper instead of the direct path."""
@@ -668,14 +668,13 @@ def exact_surrogate_ids(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def _cc_on_surrogates(
-    cc_fn,
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str,
     max_iters: int,
 ) -> DataFrame:
-    """Run a connected-components function (which needs integral ids)
-    over a string-keyed corpus: ids map to md5 surrogates (a pure
+    """Run dup_clusters (which needs integral ids) over a
+    string-keyed corpus: ids map to md5 surrogates (a pure
     column expression on BOTH docs and pairs — no translation join),
     components are computed on the surrogates, and the final cluster
     label is re-elected as the LEXICOGRAPHIC-MIN original id of each
@@ -684,7 +683,9 @@ def _cc_on_surrogates(
 
     One aggregate pass asserts the surrogate map is injective on this
     corpus (count_distinct(id) == count_distinct(surrogate)): a
-    collision, however unlikely, would silently merge clusters.
+    collision, however unlikely, would silently merge clusters. It
+    stays a collect of its own: Spark rejects DISTINCT aggregates in
+    observed metrics, so it cannot ride on dup_clusters' checkpoints.
 
     Shape at 100 TB: surrogate computation is scan-side codegen; the
     relabel is one (cluster-keyed, map-side-combining) min aggregate
@@ -709,7 +710,7 @@ def _cc_on_surrogates(
         surrogate_id(F.col("id_a")).alias("id_a"),
         surrogate_id(F.col("id_b")).alias("id_b"),
     )
-    cc = cc_fn(sdocs, spairs, id_col=id_col, max_iters=max_iters)
+    cc = dup_clusters(sdocs, spairs, id_col=id_col, max_iters=max_iters)
     labeled = cc.join(
         orig, cc[id_col] == orig["_sid"]
     ).select("_orig", "cluster_id")
@@ -728,7 +729,7 @@ def dup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iters: int = 25,
+    max_iters: int = 40,
 ) -> DataFrame:
     """Connected components over near-dup pairs: each doc gets the
     MINIMUM id reachable through the pair graph as its cluster_id,
@@ -742,26 +743,27 @@ def dup_clusters(
     doc 3 must survive only if 1-3 are truly in one cluster — the
     component, not the pair, is the dedup unit.
 
-    Algorithm: min-label propagation (hash-to-min). labels start as
-    own id; each round every node takes the min of its own label and
-    its neighbors' labels (one equi-join edges->labels + one min
-    groupBy per round — both combine map-side), plus a pointer-jumping
-    step (label's label) that short-cuts chains, giving
-    O(log diameter) rounds; near-dup components are
-    star/clique-shaped (everything overlaps the same content), so 2-4
-    rounds is typical. For adversarial long-chain graphs at cluster
-    scale, the alternating large-star/small-star variant (Kiveris et
-    al., MapReduce and Beyond) converges in O(log n) rounds with the
-    same per-round shape; diameter-bounded propagation is the right
-    default for dedup graphs.
+    Algorithm: alternating large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). One round
+    is large-star + small-star, each: per-node min neighbor (a
+    map-side-combining aggregate) -> join back onto the edges it was
+    aggregated from -> re-emit edges pointing at that min -> distinct.
+    Edges only ever move toward smaller ids; the fixpoint is a star
+    per component, every node pointing at its component min. Rounds
+    are O(log n) on any graph shape (the paper bounds them by
+    O(log^2 n)): 9 on a 1,024-node path with shuffled ids, 14 on a
+    10^5-node one, where hash-to-min label propagation needs hundreds.
+    Every join is of a frame with an aggregate of itself, so the
+    per-round planning cost stays flat.
 
-    Convergence detection without a join: labels only ever DECREASE
-    (new = least(old, neighbor-min)), so sum(labels) strictly
-    decreases iff any label changed — one cheap 1-row aggregate per
-    round. Each round is localCheckpoint()ed: iterative plans
-    otherwise double in depth per round (on a real cluster use a
-    reliable checkpoint dir; localCheckpoint trades executor-loss
-    recovery for zero-HDFS-dependence, the right trade in local mode).
+    Fixpoint test without a job of its own: each round's edge set is
+    localCheckpoint()ed (iterative plans otherwise double in depth per
+    round), and an Observation on that same checkpoint carries its
+    (count, sum(xxhash64(u, v))) checksum; an unchanged checksum ends
+    the loop. A collision masking a change needs a 64-bit hash-sum
+    coincidence on top of an identical edge count, and max_iters still
+    backstops it. The sum is decimal(38,0): a long sum of 64-bit
+    hashes overflows under ANSI mode.
 
     Output: (doc_id, cluster_id, is_keeper int). Docs with no pairs
     are singleton keepers.
@@ -773,90 +775,75 @@ def dup_clusters(
     _cc_on_surrogates), so callers never see surrogate values.
     """
     if not _is_integral_id(docs, id_col):
-        return _cc_on_surrogates(dup_clusters, docs, pairs, id_col, max_iters)
-    # both edge directions via ONE explode — a union of two selects
-    # over `pairs` embeds the (often expensive) pair pipeline twice in
-    # the plan, and ReuseExchange does not always collapse the copies
-    # (r6: measured 2x the pair-pipeline wall on the sf1 edges build).
-    # The edge list is LOOP-INVARIANT: hash-partition it on the join
-    # key once and materialize, so every propagation round's
-    # edges->labels join reuses this partitioning instead of
-    # re-shuffling the full edge set per round (labels, which change
-    # each round, are the only side that moves)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        .repartition("src")
-        .localCheckpoint(eager=True)
+        return _cc_on_surrogates(docs, pairs, id_col, max_iters)
+    edges, prev = _checkpoint_with_checksum(
+        pairs.select(F.col("id_a").cast("long").alias("u"),
+                     F.col("id_b").cast("long").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
     )
 
-    labels = docs.select(
-        F.col(id_col).alias("id"), F.col(id_col).cast("long").alias("lbl")
-    ).localCheckpoint(eager=True)
-    # decimal(38,0) sum: ids are commonly xxhash64 surrogates spanning the
-    # full signed-64 range, so a plain long sum overflows (ANSI: failure;
-    # legacy: silent wraparound weakening the monotone-decrease invariant) —
-    # same reasoning as _edges_checksum in dup_clusters_star
-    _lbl_sum = F.sum(F.col("lbl").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_lbl_sum).collect()[0][0]
+    def large_star(e: DataFrame) -> DataFrame:
+        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = adj.groupBy("u").agg(F.min("v").alias("mn"))
+        m = F.least(F.col("u"), F.col("mn"))
+        return (
+            adj.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), m.alias("v"))
+            .distinct()
+        )
+
+    def small_star(e: DataFrame) -> DataFrame:
+        # after large_star every edge is (big, small); group by the
+        # big endpoint: m = min neighbor, relink all its small
+        # neighbors and itself to m
+        mins = e.groupBy("u").agg(F.min("v").alias("mn"))
+        relink = (
+            e.join(mins, "u")
+            .filter(F.col("v") != F.col("mn"))
+            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+        )
+        self_link = mins.select("u", F.col("mn").alias("v"))
+        return relink.union(self_link).filter(F.col("u") != F.col("v")).distinct()
 
     for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("lbl").alias("nbr"))
-        )
-        # pointer jumping (r6): besides the one-hop neighbor min, each
-        # node also adopts its CURRENT LABEL'S label — the classic
-        # short-cutting step that turns O(diameter) rounds into
-        # O(log diameter) (sf1's verified-pair graph has chain
-        # components: measured 17 rounds without the jump, 5 with).
-        # Safety: a label is always the id of a node in the same
-        # component (induction from init lbl=id), so the jump target's
-        # label is component-internal; labels stay monotone decreasing
-        # (least() includes the old label), and the sum-unchanged
-        # fixpoint test is unchanged. At the fixpoint the jump adds
-        # nothing (lbl(component_min) = component_min), so the
-        # converged labels — and the output — are IDENTICAL.
-        jump = labels.select(
-            F.col("id").alias("_jid"), F.col("lbl").alias("_jlbl")
-        )
-        labels = (
-            labels.join(nbr_min, "id", "left")
-            .join(jump, F.col("lbl") == F.col("_jid"), "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("lbl"),
-                    F.coalesce(F.col("nbr"), F.col("lbl")),
-                    F.coalesce(F.col("_jlbl"), F.col("lbl")),
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(_lbl_sum).collect()[0][0]
-        if cur_sum == prev_sum:
+        edges, cur = _checkpoint_with_checksum(small_star(large_star(edges)))
+        if cur == prev:
             break
-        prev_sum = cur_sum
+        prev = cur
     else:
         raise RuntimeError(
-            f"dup_clusters did not converge in {max_iters} rounds — "
-            "pathological chain graph; raise max_iters or switch to "
-            "large-star/small-star"
+            f"dup_clusters did not converge in {max_iters} rounds"
         )
 
-    return labels.select(
-        F.col("id").alias(id_col),
-        F.col("lbl").alias("cluster_id"),
-        (F.col("lbl") == F.col("id")).cast("int").alias("is_keeper"),
+    roots = edges.select(F.col("u").alias("id"), F.col("v").alias("lbl"))
+    lbl = F.coalesce(F.col("lbl"), F.col("id").cast("long"))
+    return (
+        docs.select(F.col(id_col).alias("id"))
+        .join(roots, "id", "left")
+        .select(
+            F.col("id").alias(id_col),
+            lbl.alias("cluster_id"),
+            (lbl == F.col("id")).cast("int").alias("is_keeper"),
+        )
     )
+
+
+def _checkpoint_with_checksum(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """localCheckpoint an edge list (u, v) and return it with its
+    (count, sum(xxhash64(u, v))) checksum, observed on the checkpoint
+    job itself rather than computed by a second one."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return edges, (m["n"], m["h"])
 
 
 def benchmark_contamination(
@@ -903,113 +890,6 @@ def benchmark_contamination(
     )
 
 
-def _symmetric(edges: DataFrame) -> DataFrame:
-    """Both directions of an undirected edge list (u, v)."""
-    return edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-
-
-def _edges_checksum(edges: DataFrame) -> tuple:
-    """Cheap fixpoint detector: (count, sum(xxhash64(u,v))). Collision
-    masking a change needs a 64-bit hash-sum coincidence on top of an
-    identical edge count — not a realistic failure mode, and the
-    algorithm's max_iters backstop still catches it."""
-    row = edges.agg(
-        F.count(F.lit(1)),
-        # decimal(38,0) sum: a plain long sum of 64-bit hashes
-        # overflows under ANSI mode
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-    ).collect()[0]
-    return (row[0], row[1])
-
-
-def dup_clusters_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 40,
-) -> DataFrame:
-    """Connected components in O(log n) rounds via alternating
-    large-star / small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — the adversarial-graph scale
-    path next to dup_clusters' O(diameter) label propagation.
-
-    Same output contract as dup_clusters: (doc_id, cluster_id =
-    component-min id, is_keeper). Use this variant when components
-    may be long chains (entity-resolution-style graphs); for near-dup
-    clusters (star/clique-shaped) plain propagation does fewer
-    shuffles per round and wins.
-
-    One round here = large-star + small-star, each: symmetric
-    adjacency -> per-node min (map-side-combining HashAggregate) ->
-    join back -> re-emit edges -> distinct. Edges only ever move
-    toward smaller ids; fixpoint (star graphs, every node pointing at
-    its component min) is detected by an edge-set checksum, one 1-row
-    action per half-round.
-
-    String ids route through md5 surrogates + lexicographic-min
-    relabel, exactly as dup_clusters (see _cc_on_surrogates).
-    """
-    if not _is_integral_id(docs, id_col):
-        return _cc_on_surrogates(dup_clusters_star, docs, pairs, id_col, max_iters)
-    edges = (
-        pairs.select(F.col("id_a").cast("long").alias("u"),
-                     F.col("id_b").cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev = _edges_checksum(edges)
-
-    def large_star(e: DataFrame) -> DataFrame:
-        adj = _symmetric(e)
-        mins = adj.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("u"), F.col("mn"))
-        return (
-            adj.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # after large_star every edge is (big, small); group by the
-        # big endpoint: m = min neighbor, relink all its small
-        # neighbors and itself to m
-        mins = e.groupBy("u").agg(F.min("v").alias("mn"))
-        relink = (
-            e.join(mins, "u")
-            .filter(F.col("v") != F.col("mn"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        )
-        self_link = mins.select("u", F.col("mn").alias("v"))
-        return relink.union(self_link).filter(F.col("u") != F.col("v")).distinct()
-
-    for _ in range(max_iters):
-        edges = small_star(large_star(edges)).localCheckpoint(eager=True)
-        cur = _edges_checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"dup_clusters_star did not converge in {max_iters} rounds"
-        )
-
-    roots = edges.select(F.col("u").alias("id"), F.col("v").alias("lbl"))
-    return (
-        docs.select(F.col(id_col).alias("id"))
-        .join(roots, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("lbl"), F.col("id").cast("long")).alias("cluster_id"),
-            (F.coalesce(F.col("lbl"), F.col("id").cast("long")) == F.col("id"))
-            .cast("int").alias("is_keeper"),
-        )
-    )
-
-
 def cluster_keepers_by_score(
     clusters: DataFrame,
     scores: DataFrame,
@@ -1018,7 +898,7 @@ def cluster_keepers_by_score(
 ) -> DataFrame:
     """Re-pick each duplicate cluster's keeper by a quality signal.
 
-    dup_clusters/dup_clusters_star keep the MIN-id doc per cluster —
+    dup_clusters keeps the MIN-id doc per cluster —
     deterministic but arbitrary. Production curation keeps the BEST
     doc (longest, highest quality score, most recent crawl); this
     operator joins the cluster assignment with any per-doc score and

@@ -55,25 +55,23 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
 
 
 def read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Parquet read where ONLY path-not-found means 'no data yet'. Any
+    """Parquet read where ONLY a missing path means 'no data yet'. Any
     other failure (storage hiccup, permissions, corrupt footer)
-    re-raises: treating it as empty would let resume reprocess
+    raises: treating it as empty would let resume reprocess
     already-committed buckets under a new run_id and permanently
-    duplicate output rows."""
-    from pyspark.errors import AnalysisException
+    duplicate output rows.
 
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as exc:
-        getter = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", None
-        )
-        cls = (getter() if getter else None) or ""
-        if "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(exc):
-            # zero partitions: no task runs for it, so no Python worker
-            # starts (a local-list frame starts one per core)
-            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
-        raise
+    Existence is asked of the path's Hadoop FileSystem on the driver
+    (no Spark job), so a first run into a new output dir reads nothing
+    and logs no FileNotFoundException trace."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        # zero partitions: no task runs for it, so no Python worker
+        # starts (a local-list frame starts one per core)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:

@@ -6,13 +6,29 @@ shuffle partitions sized to cores (not the 200 default), Arrow
 enabled with a bounded batch size (the analog of the reference's task
 chunk_size, convert.py:273-275), UTC session timezone (oracle
 comparison), and generous max-fields truncation off the hot path.
+
+Every entrypoint builds its session here, spark-submit jobs included:
+a master the launcher already set (``spark-submit --master``) is
+kept, so the jobs get these settings on any cluster manager.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def _launcher_master() -> str | None:
+    """spark.master as the launcher set it, or None. spark-submit starts
+    the driver JVM before Python and hands it --master as a system
+    property; SparkConf() reads those once the gateway is connected.
+    A plain `python` run has no JVM yet, and none is started here: the
+    driver memory and JVM options must reach its launch."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
 
 
 def build_session(
@@ -22,8 +38,10 @@ def build_session(
     arrow_batch_rows: int = 8192,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[{}]".format(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
+    launcher_master = None if master else _launcher_master()
+    master = (
+        master or launcher_master or os.environ.get("SPARK_GRAFT_MASTER")
+        or "local[{}]".format(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
     n_cores = 32
     if master.startswith("local["):
@@ -31,9 +49,11 @@ def build_session(
         n_cores = os.cpu_count() if inner == "*" else int(inner)
     shuffle_partitions = shuffle_partitions or max(2 * n_cores, 8)
 
+    builder = SparkSession.builder
+    if not launcher_master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

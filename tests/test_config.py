@@ -76,6 +76,21 @@ def test_config_file_drives_job_end_to_end(spark, tmp_path):
     assert os.path.isdir(f"{out}/turns") and os.path.isdir(f"{out}/lineage")
 
 
+def test_jobs_build_their_session_through_build_session():
+    """Every jobs/ entrypoint gets build_session's settings (Arrow on,
+    UTC session time zone, shuffle partitions sized to the master): a
+    bare SparkSession.builder would run without them under
+    spark-submit."""
+    import glob
+
+    jobs = sorted(glob.glob(os.path.join(REPO, "jobs", "*.py")))
+    assert jobs
+    for path in jobs:
+        src = open(path).read()
+        assert "SparkSession.builder" not in src, path
+        assert "build_session(" in src, path
+
+
 def test_curate_config_yaml_and_validation(tmp_path):
     from pdfwf_spark.config import CurateConfig
 
@@ -88,8 +103,6 @@ def test_curate_config_yaml_and_validation(tmp_path):
     p.write_text("input: /in\noutput: /out\nbogus_key: 1\n")
     with pytest.raises(ValueError, match="unknown config keys"):
         CurateConfig.from_yaml(p)
-    with pytest.raises(ValueError, match="cluster_algorithm"):
-        CurateConfig(input="/in", output="/out", cluster_algorithm="nope")
     with pytest.raises(ValueError, match="near_dup_threshold"):
         CurateConfig(input="/in", output="/out", near_dup_threshold=2.0)
 
@@ -217,17 +230,6 @@ def test_curate_string_keyed_corpus(spark):
     assert ("https://a.example/1" in rows) and ("https://b.example/2" not in rows)
     assert res.stage_counts["dedup"] == 2
     assert res.curated.schema["url"].dataType.simpleString() == "string"
-
-    # the star algorithm takes the same route
-    cfg_star = CurateConfig(
-        input="/in", output="/out", id_col="url",
-        near_dup_threshold=0.5, cluster_algorithm="star",
-        top2gram_max=None, redact_pii=False,
-    )
-    rows2 = {
-        r["url"] for r in curate(docs, cfg_star).curated.collect()
-    }
-    assert rows2 == set(rows)
 
     # salt-split cap mode flows through curate() unchanged on an
     # uncontended corpus (no bucket over the cap -> identical result)

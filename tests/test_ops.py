@@ -485,41 +485,52 @@ def _union_find_clusters(n_nodes, pairs):
     return {i: find(i) for i in range(n_nodes)}
 
 
-def test_dup_clusters_star_matches_union_find_and_labelprop(spark):
-    """Both distributed variants must agree with a sequential
-    union-find on seeded random graphs of several shapes (sparse,
-    denser, chain-heavy)."""
+def _shuffled_path(n: int, seed: int) -> list:
+    """Edges of an n-node path whose node ids are a seeded shuffle of
+    0..n-1: the diameter is n-1 and id order follows no walk of it."""
     import random
 
-    from pdfwf_spark.operators.dedup import dup_clusters, dup_clusters_star
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
 
+
+def test_dup_clusters_matches_union_find(spark):
+    """dup_clusters must agree with a sequential union-find on seeded
+    random graphs of several shapes (sparse, denser, chain-heavy) and
+    on a 1,024-node path with shuffled ids."""
+    import random
+
+    from pdfwf_spark.operators.dedup import dup_clusters
+
+    graphs = []
     for seed, n, m in [(1, 40, 20), (2, 40, 60), (3, 30, 15)]:
         rng = random.Random(seed)
         raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        raw = [(a, b) for a, b in raw if a != b]
+        graphs.append((seed, n, [(a, b) for a, b in raw if a != b]))
+    graphs.append(("path", 1024, _shuffled_path(1024, seed=7)))
+    for seed, n, raw in graphs:
         expected = _union_find_clusters(n, raw)
 
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
         pairs = spark.createDataFrame(raw, "id_a long, id_b long")
-        star = {r["doc_id"]: r["cluster_id"]
-                for r in dup_clusters_star(nodes, pairs).collect()}
-        prop = {r["doc_id"]: r["cluster_id"]
-                for r in dup_clusters(nodes, pairs).collect()}
-        assert star == expected, f"star mismatch seed={seed}"
-        assert prop == expected, f"labelprop mismatch seed={seed}"
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in dup_clusters(nodes, pairs).collect()}
+        assert got == expected, f"mismatch seed={seed}"
 
 
-def test_dup_clusters_star_long_chain(spark):
-    """A 33-node chain: the star variant must converge well inside
-    its round budget (O(log n) vs the chain diameter of 32) and name
-    node 0 the single keeper."""
-    from pdfwf_spark.operators.dedup import dup_clusters_star
+def test_dup_clusters_shuffled_path_converges(spark):
+    """A 1,024-node path with shuffled ids converges inside 12 rounds
+    (it takes 9) and names node 0 the single keeper. Hash-to-min label
+    propagation, even with pointer jumping, needs over 200 rounds on
+    this graph."""
+    from pdfwf_spark.operators.dedup import dup_clusters
 
-    n = 33
+    n = 1024
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+    pairs = spark.createDataFrame(_shuffled_path(n, seed=7),
                                   "id_a long, id_b long")
-    out = dup_clusters_star(nodes, pairs, max_iters=12).collect()
+    out = dup_clusters(nodes, pairs, max_iters=12).collect()
     assert all(r["cluster_id"] == 0 for r in out)
     assert sum(r["is_keeper"] for r in out) == 1
 
@@ -527,9 +538,9 @@ def test_dup_clusters_star_long_chain(spark):
 def test_dup_clusters_string_ids(spark):
     """String ids route through md5 surrogates; the cluster label is
     the LEXICOGRAPHIC-min original id per component, keepers included
-    — for both CC algorithms, on a chain component (propagation must
-    cross surrogate order) plus a singleton."""
-    from pdfwf_spark.operators.dedup import dup_clusters, dup_clusters_star
+    — on a chain component (the components must cross surrogate
+    order) plus a singleton."""
+    from pdfwf_spark.operators.dedup import dup_clusters
 
     nodes = spark.createDataFrame(
         [("u:b",), ("u:a",), ("u:c",), ("u:z",)], "doc_id string"
@@ -537,14 +548,14 @@ def test_dup_clusters_string_ids(spark):
     pairs = spark.createDataFrame(
         [("u:b", "u:c"), ("u:c", "u:a")], "id_a string, id_b string"
     )
-    for fn in (dup_clusters, dup_clusters_star):
-        out = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
-               for r in fn(nodes, pairs).collect()}
-        assert out == {
-            "u:a": ("u:a", 1), "u:b": ("u:a", 0), "u:c": ("u:a", 0),
-            "u:z": ("u:z", 1),
-        }
-        assert fn(nodes, pairs).schema["cluster_id"].dataType.simpleString() == "string"
+    clusters = dup_clusters(nodes, pairs)
+    out = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+           for r in clusters.collect()}
+    assert out == {
+        "u:a": ("u:a", 1), "u:b": ("u:a", 0), "u:c": ("u:a", 0),
+        "u:z": ("u:z", 1),
+    }
+    assert clusters.schema["cluster_id"].dataType.simpleString() == "string"
 
 
 def test_dup_clusters_string_matches_integral_bijection(spark):

@@ -200,8 +200,8 @@ def test_extract_arrow_kernel_empty_call_hands_init_on(monkeypatch):
 
 
 def test_dup_clusters_pointer_jump_on_chain(spark):
-    """A pure chain graph (worst case for plain propagation) still
-    converges to component-min labels with the jump step."""
+    """A pure chain graph with ids in walk order converges to
+    component-min labels."""
     from pdfwf_spark.operators.dedup import dup_clusters
 
     n = 40

@@ -207,6 +207,28 @@ def test_resume_staging_submits_no_job(spark, fixture_rows, tmp_path, monkeypatc
     assert sum(r.buckets_processed for r in runs) == 8
 
 
+def test_read_or_empty_missing_path_and_other_failures(spark, tmp_path):
+    """A missing path reads as an empty frame of the schema without a
+    Spark job; any other failure to reach the path raises."""
+    from py4j.protocol import Py4JJavaError
+
+    from pdfwf_spark.operators.lineage import read_or_empty
+    from pdfwf_spark.schemas import LINEAGE_SCHEMA
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read-or-empty", "missing path")
+    try:
+        empty = read_or_empty(spark, str(tmp_path / "never-written"), LINEAGE_SCHEMA)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("read-or-empty"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert empty.schema == LINEAGE_SCHEMA and empty.rdd.getNumPartitions() == 0
+
+    with pytest.raises(Py4JJavaError, match="No FileSystem for scheme"):
+        read_or_empty(spark, "nosuchfs:///lineage", LINEAGE_SCHEMA)
+
+
 def test_lineage_carries_stage_timings(spark, tmp_path):
     """Lineage schema v3: per-bucket extract_ms ('parser-parse' wall)
     AND init_ms ('initialize-parser' wall, both timer.py:36-129
