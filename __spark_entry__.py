@@ -324,7 +324,7 @@ def _q_hll_state_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key health report (partitioning.profile_key_skew) for
-    events.user_id — the decision data behind salted_repartition."""
+    events.user_id — the decision data a skew-splitting repartition needs."""
     from pdfwf_spark.operators.partitioning import profile_key_skew
 
     return profile_key_skew(_t(spark, sf_dir, "events"), "user_id")

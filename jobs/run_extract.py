@@ -8,7 +8,7 @@ Cluster usage (the north-rule deployment shape):
         jobs/run_extract.py \
         --input  <iceberg table or parquet path of transcripts> \
         --output <warehouse path>  \
-        --buckets 4096 --salts 64 [--no-resume] [--run-id RID]
+        --buckets 4096 [--partitions N] [--no-resume] [--run-id RID]
 
     # or, the reference's production UX (convert.py:185-224): every
     # flag from a YAML file, explicit CLI flags overriding
@@ -22,7 +22,7 @@ Local smoke:
 The config surface mirrors the reference's WorkflowConfig
 (reference pdfwf/convert.py:185-210: pdf_dir/out_dir/num_conversions/
 chunk_size) re-expressed for a table pipeline: input table, output
-path, bucket/salt counts (the chunk-size analog), resume toggle.
+path, bucket count (the chunk-size analog), resume toggle.
 """
 
 from __future__ import annotations
@@ -41,10 +41,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output", default=None, help="output warehouse dir")
     ap.add_argument("--buckets", type=int, default=None,
                     help="commit/resume buckets (conv-hash; default 4096)")
-    ap.add_argument("--salts", type=int, default=None,
-                    help="per-turn salt fan-out inside a bucket (default 64)")
     ap.add_argument("--partitions", type=int, default=None,
-                    help="shuffle partitions for the extract stage")
+                    help="extract-stage partitions; an input scan with "
+                         "fewer is hash-repartitioned on the turn key")
     ap.add_argument("--limit", type=int, default=None,
                     help="input limit (reference num_conversions analog)")
     ap.add_argument("--run-id", default=None)
@@ -72,13 +71,11 @@ def main(argv: list[str] | None = None) -> None:
         input=pick("input", args.input, None) or ap.error("--input or config 'input' required"),
         output=pick("output", args.output, None) or ap.error("--output or config 'output' required"),
         buckets=pick("buckets", args.buckets, 4096),
-        salts=pick("salts", args.salts, 64),
         partitions=pick("partitions", args.partitions, None),
         limit=pick("limit", args.limit, None),
         run_id=pick("run_id", args.run_id, None),
         resume=yaml_vals.get("resume", True) and not args.no_resume,
         markdown_compat=pick("markdown_compat", args.markdown_compat, False),
-        prepartition=yaml_vals.get("prepartition", "auto"),
         rebalance_rows=pick("rebalance_rows", args.rebalance_rows, None),
     )
 
@@ -100,9 +97,7 @@ def main(argv: list[str] | None = None) -> None:
         run_id=cfg.run_id,
         n_buckets=cfg.buckets,
         n_partitions=cfg.partitions,
-        n_salts=cfg.salts,
         resume=cfg.resume,
-        prepartition=cfg.prepartition,
         markdown_compat=cfg.markdown_compat,
     )
     if cfg.rebalance_rows:

@@ -26,8 +26,8 @@ path — avoiding the reference's five-parsers-five-outputs divergence,
 e.g. ``pymupdf.py:63`` vs ``pypdf.py:68-70``).
 
 Spark-side structure (see ``pdfwf_spark.pipeline``): Iceberg/parquet
-scan → anti-join against committed lineage (resume) → salted
-repartition (only when the scan splits are too few) →
+scan → filter out committed buckets (resume) → hash repartition on
+the turn key (only when the scan splits are too few) →
 mapInArrow(sniff→route→parse) → stable ordering window over
 (conv_id, turn_idx, ts) → data + lineage write.
 """

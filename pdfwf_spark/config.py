@@ -5,15 +5,14 @@ pydantic model (`python -m pdfwf.convert --config cfg.yaml`;
 reference pdfwf/convert.py:185-224 WorkflowSettings,
 pdfwf/utils.py:30-89 BaseSettings.from_yaml). The engine mirrors
 that surface with a stdlib dataclass + PyYAML: every field of
-ExtractConfig except `prepartition` (YAML only) is a CLI flag of
-jobs/run_extract.py, and explicit CLI flags override YAML values (the
-same precedence pydantic-settings gives).
+ExtractConfig is a CLI flag of jobs/run_extract.py, and explicit CLI
+flags override YAML values (the same precedence pydantic-settings
+gives).
 
     # extract.yaml
     input: /data/transcripts          # table name or parquet path
     output: /warehouse/extracted
     buckets: 4096
-    salts: 64
     markdown_compat: true
 
     spark-submit --py-files pdfwf_spark.zip jobs/run_extract.py \
@@ -32,33 +31,26 @@ class ExtractConfig:
 
     Field-by-field analog of the reference WorkflowSettings
     (convert.py:185-210): pdf_dir->input, out_dir->output,
-    num_conversions->limit, chunk_size->buckets/salts; engine-only
-    knobs (partitions, prepartition, rebalance_rows) cover the Spark
-    execution shape the reference delegates to Parsl configs.
+    num_conversions->limit, chunk_size->buckets; engine-only knobs
+    (partitions, rebalance_rows) cover the Spark execution shape the
+    reference delegates to Parsl configs.
     """
 
     input: str
     output: str
     buckets: int = 4096
-    salts: int = 64
     partitions: int | None = None
     limit: int | None = None
     run_id: str | None = None
     resume: bool = True
     markdown_compat: bool = False
-    prepartition: str = "auto"
     rebalance_rows: int | None = None
 
     def __post_init__(self) -> None:
         if not self.input or not self.output:
             raise ValueError("config requires non-empty 'input' and 'output'")
-        if self.prepartition not in ("auto", "always", "never"):
-            raise ValueError(
-                f"prepartition must be auto|always|never, got {self.prepartition!r}"
-            )
-        for f in ("buckets", "salts"):
-            if getattr(self, f) < 1:
-                raise ValueError(f"{f} must be >= 1")
+        if self.buckets < 1:
+            raise ValueError("buckets must be >= 1")
 
     @classmethod
     def from_yaml(cls, path: str | Path) -> "ExtractConfig":

@@ -6,7 +6,7 @@ transcripts with the exact input_hint shape
 (conv_id, turn_idx, role, text, tool, ts), payload mix per FIXTURES.md
 (~45% html, ~35% pdfish, ~15% plain/meta, ~5% broken), Zipf-skewed
 conversation sizes with occasional mega-conversations (exercises
-salting/AQE), rows emitted in shuffled order (proves the ordering
+per-turn staging/AQE), rows emitted in shuffled order (proves the ordering
 window), and deliberate (turn_idx, ts) ties (forces a total-order
 tiebreak).
 

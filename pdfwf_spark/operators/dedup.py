@@ -35,8 +35,8 @@ SIMHASH_BITS = 16
 DEFAULT_MAX_BUCKET = 500
 
 
-def _md5_salt(key: Column, n_salts: Column) -> Column:
-    """Deterministic salt in [0, n_salts) from md5 over the row key —
+def _md5_salt(key: Column, n_subs: Column) -> Column:
+    """Deterministic salt in [0, n_subs) from md5 over the row key —
     md5 (not xxhash64) so a DuckDB oracle reproduces the split
     bit-for-bit: ('0x'||substr(md5('salt#'||id),1,8))::BIGINT % n."""
     bucket = F.conv(
@@ -44,7 +44,7 @@ def _md5_salt(key: Column, n_salts: Column) -> Column:
         16,
         10,
     ).cast("long")
-    return F.pmod(bucket, n_salts)
+    return F.pmod(bucket, n_subs)
 
 
 def cap_hot_groups(
@@ -95,11 +95,11 @@ def cap_hot_groups(
         n = F.count(F.lit(1)).over(w)
         # integer ceil-div (no float boundary drift cross-engine):
         # DuckDB mirror is (n + cap - 1) // cap
-        n_salts = F.floor((n + F.lit(cap) - 1) / F.lit(cap)).cast("long")
+        n_subs = F.floor((n + F.lit(cap) - 1) / F.lit(cap)).cast("long")
         return exploded.withColumn(
             "_salt",
-            F.when(n_salts <= 1, F.lit(0).cast("long")).otherwise(
-                _md5_salt(F.col(salt_key), n_salts)
+            F.when(n_subs <= 1, F.lit(0).cast("long")).otherwise(
+                _md5_salt(F.col(salt_key), n_subs)
             ),
         )
     raise ValueError(f"cap_hot_groups mode must be 'drop' or 'salt', got {mode!r}")

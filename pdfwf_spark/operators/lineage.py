@@ -1,13 +1,13 @@
-"""Per-partition lineage rows + anti-join resume (SURVEY §2.2 P1).
+"""Per-partition lineage rows + bucket-set resume (SURVEY §2.2 P1).
 
 The reference recovers checkpoint state by grepping '[timer]' lines
 out of Parsl stdout logs (convert.py:144-182, timer.py:132-163) and
 re-globbing inputs against that set. Here lineage is first-class data:
 one row per committed bucket with input/ok/failure counts and byte
-totals; resume is a left ANTI-join of input buckets against it —
-Catalyst broadcasts the (tiny) lineage side automatically, and at
-10^12-turn scale the anti-join prunes whole buckets before any
-payload bytes move.
+totals; resume reads the committed bucket ids (at most n_buckets
+ints) to the driver and filters the input scan against that set, so
+at 10^12-turn scale whole buckets drop out before any payload bytes
+move, with no join.
 """
 
 from __future__ import annotations
@@ -54,20 +54,20 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Asked of the path's Hadoop FileSystem on the driver: no Spark
+    job, and no FileNotFoundException trace for a path not written yet."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(hpath)
+
+
 def read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     """Parquet read where ONLY a missing path means 'no data yet'. Any
     other failure (storage hiccup, permissions, corrupt footer)
     raises: treating it as empty would let resume reprocess
     already-committed buckets under a new run_id and permanently
-    duplicate output rows.
-
-    Existence is asked of the path's Hadoop FileSystem on the driver
-    (no Spark job), so a first run into a new output dir reads nothing
-    and logs no FileNotFoundException trace."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    duplicate output rows."""
+    if not _exists(spark, path):
         # zero partitions: no task runs for it, so no Python worker
         # starts (a local-list frame starts one per core)
         return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
@@ -79,16 +79,15 @@ def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
     return read_or_empty(spark, lineage_path, LINEAGE_SCHEMA)
 
 
-def filter_uncommitted(inputs_with_bucket: DataFrame, lineage: DataFrame) -> DataFrame:
-    """Resume: drop rows whose bucket is already committed.
-
-    The anti-join's right side is distinct bucket ids — at most
-    n_buckets rows — so Catalyst picks BroadcastHashJoin (verified in
-    tests via the query plan): no shuffle of the input scan, and with
-    a bucket-partitioned input table this becomes partition pruning.
-    """
-    committed = lineage.select("bucket").distinct()
-    return inputs_with_bucket.join(F.broadcast(committed), "bucket", "left_anti")
+def committed_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+    """Resume: the committed bucket ids as a driver set — at most
+    n_buckets ints, read JVM-side (no Python worker). Empty, with no
+    Spark job, when nothing is committed yet. Failures other than a
+    missing path raise, as in read_or_empty."""
+    if not _exists(spark, lineage_path):
+        return set()
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    return {r["bucket"] for r in lineage.select("bucket").distinct().collect()}
 
 
 def _bloom_probe_cols(key, m_bits: int, k: int):
@@ -117,8 +116,8 @@ def bloom_filter_uncommitted(
     m_bits: int = 1 << 20,
     k: int = 2,
 ) -> DataFrame:
-    """ROW-level resume at the scale where `filter_uncommitted`'s
-    broadcast breaks down: the committed side is per-document ids
+    """ROW-level resume at the scale where a driver set of committed
+    keys breaks down: the committed side is per-document ids
     (10^9+ rows after months of incremental runs), far too big to
     broadcast, and a plain anti-join would shuffle the ENTIRE 10^12-row
     input scan on the key. Instead:

@@ -1,15 +1,15 @@
-"""Salted bucketing + skew handling (SURVEY §2.3 skew note).
+"""Commit buckets + skew handling (SURVEY §2.3 skew note).
 
 The reference sidesteps skew by fixing chunk size (convert.py:273-275,
 ~10 PDFs per zip task). Our unit of work is a *turn*, so
 mega-conversations would otherwise pin one conv to one task. Because
-extraction is per-row (no cross-turn state inside the UDF), we can
-salt freely: the physical partition key is
-(bucket, salt) = (pmod(xxhash64(conv_id), B), pmod(xxhash64(conv_id,
-turn_idx), S)) which splits a mega-conv across S tasks while `bucket`
-remains the logical commit/resume unit. Per-conv grouping is restored
-only in the (cheap) ordering window afterwards — mirroring how the
-reference parallelizes at page granularity and regroups by file_id
+extraction is per-row (no cross-turn state inside the UDF), staging
+may hash on the turn key (conv_id, turn_idx) — per-tuple granularity,
+the finest split of a hot conversation (pipeline._stage) — while
+`bucket` = pmod(xxhash64(conv_id), B) remains the logical
+commit/resume unit. Per-conv grouping is restored only in the (cheap)
+ordering window afterwards — mirroring how the reference parallelizes
+at page granularity and regroups by file_id
 (tensor_utils.py:2159-2291).
 """
 
@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
-DEFAULT_SALTS = 16
 
 
 def repartition_for_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
@@ -48,21 +47,6 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     )
 
 
-def salted_repartition(
-    df: DataFrame,
-    n_partitions: int,
-    n_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """Spread work evenly even under mega-conversation skew.
-
-    Salting on (conv_id, turn_idx) gives per-turn granularity; the
-    extraction UDF is row-local so correctness is unaffected. AQE
-    (spark.sql.adaptive.*) additionally coalesces/splits at runtime.
-    """
-    salt = F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(n_salts))
-    return df.repartition(n_partitions, F.col("bucket"), salt)
-
-
 def _key_counts(df: DataFrame, key_cols: Sequence[str] | str) -> tuple[DataFrame, list[str]]:
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     absent = [k for k in keys if k not in df.columns]
@@ -78,8 +62,8 @@ def profile_key_skew(df: DataFrame, key_cols: Sequence[str] | str) -> DataFrame:
     perfectly uniform). Integer milli units, no floats — engine-
     portable. Cost: ONE map-side-combined count per key, then a
     driver-sized aggregate over the O(distinct) counts table; run it
-    before committing to a partitioning, exactly the decision data
-    salted_repartition needs."""
+    before committing to a partitioning, exactly the decision data a
+    skew-splitting repartition needs."""
     counts, _ = _key_counts(df, key_cols)
     return counts.agg(
         F.sum("n_rows").alias("n_rows"),

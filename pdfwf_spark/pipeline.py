@@ -1,16 +1,20 @@
 """End-to-end extraction job (SURVEY §3.1 Spark lifecycle).
 
-    scan -> anti-join lineage (resume) -> [salted repartition, only if
-    the scan layout needs it] -> mapInArrow(sniff -> route -> parse)
-    -> stable ordering window -> write data, then lineage
+    scan -> filter out committed buckets (resume) -> [hash repartition
+    on the turn key, only if the scan is under-split] ->
+    mapInArrow(sniff -> route -> parse) -> stable ordering window ->
+    write data, then lineage
 
 Plan properties (asserted in tests via .explain):
-- the resume anti-join is a BroadcastHashJoin (lineage side is tiny);
-- AT MOST one wide shuffle before the UDF (the salted repartition,
+- the resume step is a Filter on the scan against the committed
+  bucket ids, read to the driver beforehand (at most n_buckets ints):
+  no join, no exchange; a rerun with every bucket committed plans no
+  extraction at all;
+- AT MOST one wide shuffle before the UDF (the turn-key repartition,
   skipped when scan splits already balance the work) and exactly one
   after (the per-conv ordering window, which moves the smaller
   post-extraction rows);
-- no driver-side loops, no collect.
+- no driver-side loops over data.
 
 Commit protocol (reference analog: convert.py:144-182 timer-log
 checkpointing): data for a run is written first; the per-bucket
@@ -34,15 +38,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdfwf_spark.operators.extract import extract_turns
-from pdfwf_spark.operators.lineage import filter_uncommitted, lineage_rows, read_lineage
+from pdfwf_spark.operators.lineage import committed_buckets, lineage_rows, read_lineage
 from pdfwf_spark.schemas import LINEAGE_SCHEMA
 from pdfwf_spark.operators.ordering import with_turn_rank
-from pdfwf_spark.operators.partitioning import (
-    DEFAULT_BUCKETS,
-    DEFAULT_SALTS,
-    salted_repartition,
-    with_bucket,
-)
+from pdfwf_spark.operators.partitioning import DEFAULT_BUCKETS, with_bucket
 from pdfwf_spark.sinks.table import append_data, append_lineage
 
 
@@ -61,50 +60,38 @@ class RunResult:
     lineage_s: float = 0.0
 
 
-def _salts(transcripts: DataFrame, n_partitions: int | None, prepartition: str) -> bool:
-    """Whether staging salt-repartitions the input.
+def _stage(transcripts: DataFrame, n_buckets: int, n_partitions: int | None) -> DataFrame:
+    """The one staging rule: bucket every turn; hash-exchange on the
+    turn key (conv_id, turn_idx) only when the scan has fewer
+    partitions than the target (default: defaultParallelism).
 
-    prepartition:
-    - "auto" (default): shuffle only when the scan has fewer
-      partitions than the target. Parquet/Iceberg splits already
-      spread turns arbitrarily across tasks (row groups do not follow
-      conv boundaries) and extraction is per-row, so a well-split scan
-      needs NO payload shuffle before the UDF — at 10^12 turns that
-      skips a full-corpus shuffle; the only wide exchange left is the
-      ordering window over the (smaller) post-extraction rows.
-    - "always": force the salted repartition — for inputs whose file
-      layout is conv-clustered/skewed (e.g. one giant file per
-      mega-conversation) where scan splits alone would be unbalanced.
-    - "never": trust the scan layout unconditionally.
-
-    n_partitions defaults to the session's defaultParallelism.
-    """
-    if prepartition != "auto":
-        return prepartition == "always"
+    A well-split parquet/Iceberg scan already spreads turns across
+    tasks and extraction is per-row, so payloads never shuffle. An
+    under-split scan is hashed per turn, the finest split of a hot
+    conversation; the ordering window regroups by conv_id afterwards.
+    Not a round-robin repartition: its retry-determinism comes from a
+    per-partition sort, which would sort raw payloads."""
     target = n_partitions or transcripts.sparkSession.sparkContext.defaultParallelism
-    return transcripts.rdd.getNumPartitions() < target
+    staged = with_bucket(transcripts, n_buckets)
+    if transcripts.rdd.getNumPartitions() < target:
+        staged = staged.repartition(target, "conv_id", "turn_idx")
+    return staged
 
 
 def extract_df(
     transcripts: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
     n_partitions: int | None = None,
-    n_salts: int = DEFAULT_SALTS,
-    prepartition: str = "auto",
     markdown_compat: bool = False,
 ) -> DataFrame:
     """Pure transform: transcripts -> ranked extraction output (all
     statuses). Composable; no I/O.
 
-    Bucket + (conditionally) salt-repartition, extract, rank.
+    Stage (bucket, repartition if under-split), extract, rank.
     markdown_compat: the reference's optional markdown repair pass
     (nougat_.py:245-246, config.markdown) — applied JVM-side on
     clean_text (codegen'd regexes, no extra Python)."""
-    n_partitions = n_partitions or transcripts.sparkSession.sparkContext.defaultParallelism
-    staged = with_bucket(transcripts, n_buckets)
-    if _salts(transcripts, n_partitions, prepartition):
-        staged = salted_repartition(staged, n_partitions, n_salts)
-    out = with_turn_rank(extract_turns(staged))
+    out = with_turn_rank(extract_turns(_stage(transcripts, n_buckets, n_partitions)))
     if markdown_compat:
         from pdfwf_spark.operators.functions import markdown_compatible_col
 
@@ -119,9 +106,7 @@ def run_extraction(
     run_id: str | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     n_partitions: int | None = None,
-    n_salts: int = DEFAULT_SALTS,
     resume: bool = True,
-    prepartition: str = "auto",
     markdown_compat: bool = False,
 ) -> RunResult:
     """Execute the job against `out_dir` (data at {out_dir}/turns,
@@ -139,15 +124,18 @@ def run_extraction(
             "verbatim as a partition directory name)"
         )
     if resume:
-        # settle the salt choice on the input scan: asking the
-        # anti-joined plan for its partition count (.rdd) would run the
-        # lineage side as Spark jobs before the write, and the write
-        # would run it again. A broadcast left-anti join keeps the
-        # streamed side's partitioning, so the choice is the same.
-        prepartition = "always" if _salts(transcripts, n_partitions, prepartition) else "never"
-        transcripts = filter_uncommitted(
-            with_bucket(transcripts, n_buckets), read_lineage(spark, f"{out_dir}/lineage")
-        ).drop("bucket")
+        # committed bucket ids (<= n_buckets ints) come to the driver and
+        # the scan is filtered against them: a Filter keeps the scan's
+        # partitioning, so staging reads the same partition count
+        committed = committed_buckets(spark, f"{out_dir}/lineage")
+        if committed >= set(range(n_buckets)):
+            return RunResult(run_id, 0, 0, 0, 0, time.monotonic() - t0)
+        if committed:
+            transcripts = (
+                with_bucket(transcripts, n_buckets)
+                .filter(~F.col("bucket").isin(sorted(committed)))
+                .drop("bucket")
+            )
     # ONE materialization of the extraction output: the all-status
     # ranked rows go straight to the staging write (no persist — at
     # 100 TB a MEMORY_AND_DISK persist of the full post-extraction
@@ -160,7 +148,7 @@ def run_extraction(
     # preserving the reference's failed-docs-have-no-output-row
     # semantics (README.md:115-116) while lineage still counts them.
     all_ranked = extract_df(
-        transcripts, n_buckets, n_partitions, n_salts, prepartition, markdown_compat
+        transcripts, n_buckets, n_partitions, markdown_compat
     ).withColumn("run_id", F.lit(run_id))
     t_write = time.monotonic()
     append_data(all_ranked, f"{out_dir}/turns")

@@ -62,7 +62,7 @@ EXTRACTED_SCHEMA = T.StructType(
 
 # Per-partition lineage rows — the first-class replacement for the
 # reference's timer-log checkpoint scraping (convert.py:144-182,
-# timer.py:132-163). Resume anti-joins input buckets against this.
+# timer.py:132-163). Resume skips the input buckets committed here.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

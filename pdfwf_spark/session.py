@@ -39,11 +39,13 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     launcher_master = None if master else _launcher_master()
+    # the host's cores unless SPARK_GRAFT_CPUS says otherwise; also the
+    # shuffle-partition basis under a cluster manager's master
+    n_cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = (
         master or launcher_master or os.environ.get("SPARK_GRAFT_MASTER")
-        or "local[{}]".format(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        or f"local[{n_cores}]"
     )
-    n_cores = 32
     if master.startswith("local["):
         inner = master[len("local["):-1]
         n_cores = os.cpu_count() if inner == "*" else int(inner)

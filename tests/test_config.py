@@ -22,7 +22,7 @@ def test_from_yaml_defaults_and_overrides(tmp_path):
                  "markdown_compat: true\n")
     cfg = ExtractConfig.from_yaml(p)
     assert cfg.buckets == 128 and cfg.markdown_compat is True
-    assert cfg.salts == 64 and cfg.resume is True    # defaults survive
+    assert cfg.partitions is None and cfg.resume is True    # defaults survive
 
 
 def test_from_yaml_rejects_unknown_keys(tmp_path):
@@ -35,8 +35,6 @@ def test_from_yaml_rejects_unknown_keys(tmp_path):
 def test_validation():
     with pytest.raises(ValueError, match="non-empty"):
         ExtractConfig(input="", output="/o")
-    with pytest.raises(ValueError, match="prepartition"):
-        ExtractConfig(input="/i", output="/o", prepartition="sometimes")
     with pytest.raises(ValueError, match="buckets"):
         ExtractConfig(input="/i", output="/o", buckets=0)
 
@@ -61,7 +59,7 @@ def test_config_file_drives_job_end_to_end(spark, tmp_path):
     spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.parquet(inp)
 
     cfg = tmp_path / "job.yaml"
-    cfg.write_text(f"input: {inp}\noutput: {out}\nbuckets: 8\nsalts: 4\n"
+    cfg.write_text(f"input: {inp}\noutput: {out}\nbuckets: 8\n"
                    "partitions: 4\nmarkdown_compat: true\n")
     env = dict(os.environ, PYTHONPATH=REPO)
     res = subprocess.run(
@@ -89,6 +87,27 @@ def test_jobs_build_their_session_through_build_session():
         src = open(path).read()
         assert "SparkSession.builder" not in src, path
         assert "build_session(" in src, path
+
+
+def test_build_session_defaults_to_host_cores(monkeypatch):
+    """With no master argument, launcher master, SPARK_GRAFT_MASTER or
+    SPARK_GRAFT_CPUS, the session runs local[os.cpu_count()] with
+    shuffle partitions sized to it. The builder is faked: no JVM."""
+    from unittest import mock
+
+    import pdfwf_spark.session as session
+
+    builder = mock.MagicMock()
+    for step in ("master", "appName", "config"):
+        getattr(builder, step).return_value = builder
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.setattr(session, "_launcher_master", lambda: None)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 6)
+    monkeypatch.setattr(session, "SparkSession", mock.Mock(builder=builder))
+    session.build_session()
+    builder.master.assert_called_once_with("local[6]")
+    builder.config.assert_any_call("spark.sql.shuffle.partitions", "12")
 
 
 def test_curate_config_yaml_and_validation(tmp_path):

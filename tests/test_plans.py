@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -27,14 +29,14 @@ def _plan(df) -> str:
 
 
 def test_extraction_shuffle_budget(transcripts):
-    """prepartition='always': exactly two exchanges (salted
-    repartition before the UDF + ordering window after).
-    prepartition='auto' on an already-well-split scan: exactly ONE
-    (the window) — payload bytes never shuffle."""
-    forced = _plan(
-        extract_df(transcripts, n_buckets=16, n_partitions=4, prepartition="always")
-    )
-    assert forced.count("Exchange ") + forced.count("Exchange\n") == 2, forced
+    """Under-split scan (fewer partitions than n_partitions): exactly
+    two exchanges (hash repartition on the turn key before the UDF +
+    ordering window after). Already well-split scan: exactly ONE (the
+    window) — payload bytes never shuffle."""
+    assert transcripts.rdd.getNumPartitions() < 8
+    under = _plan(extract_df(transcripts, n_buckets=16, n_partitions=8))
+    assert under.count("Exchange ") + under.count("Exchange\n") == 2, under
+    assert re.search(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, 8\)", under), under
 
     auto = _plan(
         extract_df(transcripts.repartition(8), n_buckets=16, n_partitions=4)

@@ -4,6 +4,8 @@ ordering, skew balance, lineage + resume idempotence (FIXTURES.md §5).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -97,11 +99,12 @@ def test_tie_break_total_order(extracted):
 
 
 def test_skew_partition_balance(spark, transcripts):
-    """Salted repartition splits mega-conversations: no physical
-    partition holds more than ~3x the mean row count."""
-    from pdfwf_spark.operators.partitioning import salted_repartition
+    """Staging an under-split scan hashes on the turn key, which splits
+    mega-conversations: no physical partition holds more than ~3x the
+    mean row count."""
+    from pdfwf_spark.pipeline import _stage
 
-    staged = salted_repartition(with_bucket(transcripts, 16), 16, n_salts=16)
+    staged = _stage(transcripts, 16, 16)
     sizes = (
         staged.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -109,7 +112,7 @@ def test_skew_partition_balance(spark, transcripts):
         .collect()
     )
     counts = [r["count"] for r in sizes]
-    assert len(counts) > 1
+    assert staged.rdd.getNumPartitions() == 16 and len(counts) > 1
     assert max(counts) <= 3 * (sum(counts) / len(counts))
 
 
@@ -156,55 +159,62 @@ def test_lineage_counts(spark, transcripts, golden, tmp_path):
     assert agg["fail"] == sum(1 for g in golden if g["parse_status"] != "ok")
 
 
-def test_resume_antijoin_is_broadcast(spark, transcripts, tmp_path):
-    """The resume anti-join must not shuffle the input scan."""
+def test_resume_filter_sits_on_the_scan(spark, transcripts, tmp_path, monkeypatch):
+    """The frame a resume run writes filters committed buckets out of
+    the input scan with a Filter: no join anywhere, and no exchange
+    between the filter and the scan."""
+    import pdfwf_spark.pipeline as pipeline
+
     out = str(tmp_path / "out3")
     run_extraction(
         spark, with_bucket(transcripts, 8).filter(F.col("bucket") < 2).drop("bucket"),
         out, n_buckets=8, n_partitions=8,
     )
-    from pdfwf_spark.operators.lineage import filter_uncommitted, read_lineage
+    written = []
+    monkeypatch.setattr(pipeline, "append_data", lambda df, path: written.append(df))
+    run_extraction(spark, transcripts, out, n_buckets=8, n_partitions=8)
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    below = plan[plan.index("Filter NOT cast(pmod(xxhash64(conv_id#"):]
+    assert "Exchange" not in below and "Scan" in below, plan
 
-    remaining = filter_uncommitted(
-        with_bucket(transcripts, 8), read_lineage(spark, f"{out}/lineage")
-    )
-    plan = remaining._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
-
-def test_resume_staging_submits_no_job(spark, fixture_rows, tmp_path, monkeypatch):
-    """Building the frame a resume run writes submits no Spark job: the
-    salt decision reads the input scan. Asking the anti-joined plan for
-    its partition count would run the lineage side before the write,
-    and the write would run it again."""
+def test_resume_job_counts(spark, fixture_rows, tmp_path, monkeypatch):
+    """Spark jobs per run on the 60-conv / 16-bucket fixture, whose
+    4-partition scan needs no staging exchange: a fresh run over half
+    the buckets (no lineage yet, so no committed-set read), the rerun
+    completing the rest, and a rerun with every bucket committed,
+    which runs only the JVM-side committed-set read: it plans no
+    extraction (so no MapInArrow stage starts Python workers) and
+    writes no data."""
     import pdfwf_spark.pipeline as pipeline
 
     transcripts = spark.createDataFrame(
         [{k: v for k, v in r.items() if not k.startswith("_")} for r in fixture_rows],
         TRANSCRIPT_SCHEMA,
     )
-    first_half = with_bucket(transcripts, 8).filter(F.col("bucket") < 4).drop("bucket")
+    first_half = with_bucket(transcripts, 16).filter(F.col("bucket") < 8).drop("bucket")
+    extractions = []
+    extract_turns = pipeline.extract_turns
+    monkeypatch.setattr(
+        pipeline, "extract_turns", lambda df: extractions.append(df) or extract_turns(df)
+    )
     sc = spark.sparkContext
-    jobs_before_write = []
-    write = pipeline.append_data
-
-    def recording_write(df, path):
-        group = sc.getLocalProperty("spark.jobGroup.id")
-        jobs_before_write.append(list(sc.statusTracker().getJobIdsForGroup(group)))
-        write(df, path)
-
-    monkeypatch.setattr(pipeline, "append_data", recording_write)
     out = str(tmp_path / "out")
-    runs = []
+    runs, jobs = [], []
     try:
-        # empty output, then a rerun against committed lineage
-        for name, inputs in (("first", first_half), ("rerun", transcripts)):
-            sc.setJobGroup(f"resume-staging-{name}", name)
-            runs.append(run_extraction(spark, inputs, out, n_buckets=8, n_partitions=8))
+        for name, inputs in (("fresh", first_half), ("rest", transcripts), ("done", transcripts)):
+            sc.setJobGroup(f"resume-jobs-{name}", name)
+            runs.append(run_extraction(spark, inputs, out, n_buckets=16, n_partitions=4))
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"resume-jobs-{name}")))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs_before_write == [[], []]
-    assert sum(r.buckets_processed for r in runs) == 8
+    assert jobs == [5, 7, 2]
+    assert len(extractions) == 2
+    assert sum(r.buckets_processed for r in runs) == 16
+    assert runs[2].input_rows == 0 and runs[2].buckets_processed == 0
+    assert not os.path.exists(f"{out}/turns/run_id={runs[2].run_id}")
 
 
 def test_read_or_empty_missing_path_and_other_failures(spark, tmp_path):

@@ -50,11 +50,12 @@ def main() -> None:
         {k: v for k, v in r.items() if not k.startswith("_")}
         for r in gen_transcripts(10, seed=1, mega_every=0)
     ]
-    transcripts = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).repartition(8)
+    raw = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)  # 4-partition scan
+    transcripts = raw.repartition(8)
 
     out.write(
-        "\n## Flagship extraction (prepartition='auto', well-split scan)\n\n"
-        "Property: payload bytes flow scan -> MapInPandas with NO\n"
+        "\n## Flagship extraction (well-split scan)\n\n"
+        "Property: payload bytes flow scan -> MapInArrow with NO\n"
         "exchange in between; the ONLY wide exchange is the ordering\n"
         "window over post-extraction rows.\n\n```\n"
     )
@@ -62,13 +63,12 @@ def main() -> None:
     out.write("\n```\n")
 
     out.write(
-        "\n## Flagship extraction (prepartition='always', skewed layout)\n\n"
-        "Property: exactly two exchanges — the salted repartition on\n"
-        "(bucket, salt) before the UDF, the window after.\n\n```\n"
+        "\n## Flagship extraction (under-split scan)\n\n"
+        "Property: the scan has fewer partitions than the target, so\n"
+        "exactly two exchanges — the hash repartition on the turn key\n"
+        "(conv_id, turn_idx) before the UDF, the window after.\n\n```\n"
     )
-    out.write(
-        fmt(extract_df(transcripts, n_buckets=16, n_partitions=4, prepartition="always"))
-    )
+    out.write(fmt(extract_df(raw, n_buckets=16, n_partitions=8)))
     out.write("\n```\n")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -92,17 +92,16 @@ def main() -> None:
     out.write(fmt(minhash_signatures(docs, k=8)))
     out.write("\n```\n")
 
-    from pdfwf_spark.operators.lineage import filter_uncommitted
     from pdfwf_spark.operators.partitioning import with_bucket
-    from pdfwf_spark.schemas import LINEAGE_SCHEMA
 
-    lineage = spark.createDataFrame([], LINEAGE_SCHEMA)
     out.write(
-        "\n## resume anti-join\n\nProperty: BroadcastHashJoin LeftAnti —\n"
-        "the committed-buckets side broadcasts; the input scan is never\n"
-        "shuffled for resume.\n\n```\n"
+        "\n## resume filter\n\nProperty: the committed bucket ids (here\n"
+        "0-3, read to the driver by lineage.committed_buckets) filter the\n"
+        "input as run_extraction does: a Filter directly on the scan —\n"
+        "no join, no exchange.\n\n```\n"
     )
-    out.write(fmt(filter_uncommitted(with_bucket(transcripts, 16), lineage)))
+    resumed = with_bucket(raw, 16).filter(~F.col("bucket").isin(0, 1, 2, 3))
+    out.write(fmt(resumed.drop("bucket")))
     out.write("\n```\n")
 
     from pdfwf_spark.operators.dedup import simhash_band_pairs

@@ -53,8 +53,7 @@ def main() -> None:
     import __spark_entry__ as em
     from pdfwf_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(app_name="qhash", master=f"local[{cpus}]")
+    spark = build_session(app_name="qhash")
 
     qs = em.queries()
     names = sorted(qs) if args.only is None else args.only.split(",")
