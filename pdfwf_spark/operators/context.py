@@ -328,7 +328,7 @@ def dialogue_segment_pairs(
     bucket <= max_bucket."""
     if w < 2:
         raise ValueError(f"w must be >= 2, got {w}")
-    from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, cap_hot_groups
+    from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, _capped_self_join
 
     if max_bucket is None:
         max_bucket = DEFAULT_MAX_BUCKET
@@ -351,13 +351,9 @@ def dialogue_segment_pairs(
         .select(conv_col, "seg_sig")
         .distinct()
     )
-    capped = cap_hot_groups(shingles, ["seg_sig"], max_bucket)
-    a = capped.select(F.col(conv_col).alias("conv_a"), "seg_sig")
-    b = capped.select(F.col(conv_col).alias("conv_b"), "seg_sig")
     return (
-        a.join(b, "seg_sig")
-        .filter(F.col("conv_a") < F.col("conv_b"))
-        .groupBy("conv_a", "conv_b")
+        _capped_self_join(shingles, conv_col, ["seg_sig"], max_bucket)
+        .groupBy(F.col("id_a").alias("conv_a"), F.col("id_b").alias("conv_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

@@ -4,14 +4,25 @@ Not present in the reference (pdfwf never dedups its corpus) — these
 are the standard web-scale companions of an extraction pipeline, built
 Spark-first:
 
-- exact_dedup          hash-groupBy (one shuffle on a 16-byte key)
-- minhash_signatures   shingle -> k minhashes, map-side combinable
-- lsh_candidate_pairs  band-bucket self-join (bounds the quadratic
-                       blowup; the scale path for near-dup at 100 TB)
-- ngram_jaccard_pairs  exact Jaccard via shingle self-join — meant as
-                       the *verifier* applied to LSH candidates; on
-                       its own it explodes on hot shingles at scale
-- simhash              64->SIMHASH_BITS bitwise-majority fingerprint
+- exact_dedup            hash-groupBy (one shuffle on a 16-byte key)
+- minhash_signatures     shingle -> k minhashes, map-side combinable
+- lsh_candidate_pairs    band-bucket self-join (the scale path for
+                         near-dup at 100 TB)
+- ngram_jaccard_pairs    exact Jaccard via shingle self-join (explodes
+                         on hot shingles at scale without its df cap)
+- lsh_verified_neardups  exact Jaccard on LSH candidates only (curate)
+- simhash (16-bit), simhash_bands / simhash64, simhash_band_pairs:
+  bitwise-majority fingerprints and banded-Hamming candidate pairs
+- shared_passage_pairs, benchmark_contamination: verbatim 8-gram
+  borrowing and eval-set n-gram overlap
+- dup_clusters, cluster_keepers_by_score, surrogate_id,
+  exact_surrogate_ids: duplicate clusters and their keepers
+- cap_hot_groups, and the tokenizers tokens / word_ngrams /
+  word_shingles / exploded_shingles
+
+Every candidate-pair self-join (banded buckets, passage shingles,
+context.dialogue_segment_pairs' segments) is _capped_self_join; both
+exact-Jaccard paths score through _jaccard_milli.
 
 All hashing is md5-hex-substring based (not xxhash64) so a DuckDB
 oracle can reproduce signatures bit-for-bit (fixed-width lowercase hex
@@ -51,58 +62,103 @@ def cap_hot_groups(
     exploded: DataFrame,
     keys: list[str],
     cap: int | None,
-    mode: str = "drop",
     salt_key: str | None = None,
 ) -> DataFrame:
     """Bound the quadratic blowup of hot groups before a banded
-    candidate self-join — the guard applied in front of every
-    band-bucket equi-self-join in this module.
+    candidate self-join — the guard _capped_self_join applies.
 
-    mode="drop" (default): rows in groups larger than `cap` are
-    dropped entirely. Bounded work, but a recall CLIFF: every pair in
-    a dropped bucket is lost, including genuinely near-duplicate ones
+    Without `salt_key`, rows in groups larger than `cap` are dropped
+    entirely. Bounded work, but a recall CLIFF: every pair in a
+    dropped bucket is lost, including genuinely near-duplicate ones
     whose other bands were also hot.
 
-    mode="salt": groups larger than `cap` are SPLIT into
-    ceil(n/cap) hash sub-buckets instead (a `_salt` column is added;
-    callers include it in the self-join keys). Work per group is
-    bounded at ~cap^2/2 * ceil(n/cap) pairs — linear in n for fixed
-    cap, vs the quadratic n^2/2 — while each sub-bucket still yields
-    its intra-bucket pairs, so recall degrades smoothly (expected
+    With `salt_key` (the column whose md5 drives the split, the doc
+    id), groups larger than `cap` are SPLIT into ceil(n/cap) hash
+    sub-buckets instead (a `_salt` column is added; callers include it
+    in the self-join keys). Work per group is bounded at
+    ~cap^2/2 * ceil(n/cap) pairs — linear in n for fixed cap, vs the
+    quadratic n^2/2 — while each sub-bucket still yields its
+    intra-bucket pairs, so recall degrades smoothly (expected
     pair-recall within a split group ~ cap/n) instead of dropping to
     zero. Groups at or under the cap get salt 0 (single sub-bucket,
-    exact behavior). `salt_key` names the column whose md5 drives the
-    split (the doc id); required in salt mode.
+    exact behavior).
 
-    Both modes are one window count over the group keys: the same
-    hash partitioning the self-join needs anyway, so the guard adds
-    no extra shuffle of the exploded rows (the window's exchange is
-    the join's exchange).
+    Both are one window count over the group keys: the same hash
+    partitioning the self-join needs anyway, so the guard adds no
+    extra shuffle of the exploded rows (the window's exchange is the
+    join's exchange).
     """
     if cap is None:
         return exploded
-    if mode == "drop":
-        w = Window.partitionBy(*[F.col(k) for k in keys])
-        return (
-            exploded.withColumn("_grp_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("_grp_n") <= cap)
-            .drop("_grp_n")
+    w = Window.partitionBy(*[F.col(k) for k in keys])
+    n = F.count(F.lit(1)).over(w)
+    if salt_key is None:
+        return exploded.withColumn("_grp_n", n).filter(F.col("_grp_n") <= cap).drop("_grp_n")
+    # integer ceil-div (no float boundary drift cross-engine):
+    # DuckDB mirror is (n + cap - 1) // cap
+    n_subs = F.floor((n + F.lit(cap) - 1) / F.lit(cap)).cast("long")
+    return exploded.withColumn(
+        "_salt",
+        F.when(n_subs <= 1, F.lit(0).cast("long")).otherwise(
+            _md5_salt(F.col(salt_key), n_subs)
+        ),
+    )
+
+
+def _capped_self_join(
+    rows: DataFrame,
+    id_col: str,
+    keys: list[str],
+    cap: int | None,
+    salt: bool = False,
+) -> DataFrame:
+    """(id_a, id_b) for every two rows sharing `keys`, id_a < id_b:
+    cap_hot_groups, then an equi-self-join on `keys` (plus `_salt`
+    when `salt` splits hot groups instead of dropping them). The pair
+    stream is returned unreduced: each caller applies the reducer
+    measured for its stream shape."""
+    salt = salt and cap is not None
+    rows = cap_hot_groups(rows, keys, cap, salt_key=id_col if salt else None)
+    on = None
+    for k in [*keys, "_salt"] if salt else keys:
+        eq = F.col(f"a.{k}") == F.col(f"b.{k}")
+        on = eq if on is None else on & eq
+    a, b = rows.alias("a"), rows.alias("b")
+    return a.join(b, on & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+    )
+
+
+def _band_rows(df: DataFrame, id_col: str, values: list[Column]) -> DataFrame:
+    """(id_col, band, bucket): one row per banded value, `band` being
+    its index in `values` — the input of a banded _capped_self_join."""
+    bands = F.array(
+        *[F.struct(F.lit(b).alias("band"), v.alias("bucket")) for b, v in enumerate(values)]
+    )
+    return df.select(F.col(id_col), F.explode(bands).alias("bb")).select(
+        id_col, "bb.band", "bb.bucket"
+    )
+
+
+def _jaccard_milli(inter: DataFrame, counts: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard_milli) from per-pair intersection sizes
+    (id_a, id_b, inter) and per-doc shingle counts (id, n_sh), keeping
+    pairs at or above round(1000*J) >= int(threshold*1000). Integer
+    per-mille so the DuckDB oracle hash-matches without float drift."""
+    ca = counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    cb = counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return (
+        inter.join(ca, "id_a")
+        .join(cb, "id_b")
+        .withColumn(
+            "jaccard_milli",
+            F.round(
+                1000 * F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+            ).cast("int"),
         )
-    if mode == "salt":
-        if salt_key is None:
-            raise ValueError("cap_hot_groups(mode='salt') needs salt_key")
-        w = Window.partitionBy(*[F.col(k) for k in keys])
-        n = F.count(F.lit(1)).over(w)
-        # integer ceil-div (no float boundary drift cross-engine):
-        # DuckDB mirror is (n + cap - 1) // cap
-        n_subs = F.floor((n + F.lit(cap) - 1) / F.lit(cap)).cast("long")
-        return exploded.withColumn(
-            "_salt",
-            F.when(n_subs <= 1, F.lit(0).cast("long")).otherwise(
-                _md5_salt(F.col(salt_key), n_subs)
-            ),
-        )
-    raise ValueError(f"cap_hot_groups mode must be 'drop' or 'salt', got {mode!r}")
+        .filter(F.col("jaccard_milli") >= int(threshold * 1000))
+        .select("id_a", "id_b", "jaccard_milli")
+    )
 
 
 def _pair_counts(pairs: DataFrame) -> DataFrame:
@@ -262,40 +318,23 @@ def lsh_candidate_pairs(
             f"banding {bands}x{rows_per_band} needs {k} signature lanes; "
             f"missing {missing} — generate with minhash_signatures(k={k})"
         )
-    band_cols = []
-    for b in range(bands):
-        lanes = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *lanes)).alias("bucket"))
-        )
-    exploded = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-    exploded = cap_hot_groups(
-        exploded, ["band", "bucket"], max_bucket_size,
-        mode=cap_mode, salt_key=id_col,
-    )
-    join_keys = (F.col("a.band") == F.col("b.band")) & (
-        F.col("a.bucket") == F.col("b.bucket")
-    )
-    if cap_mode == "salt" and max_bucket_size is not None:
-        join_keys = join_keys & (F.col("a._salt") == F.col("b._salt"))
-    a, b_ = exploded.alias("a"), exploded.alias("b")
+    if cap_mode not in ("drop", "salt"):
+        raise ValueError(f"cap_mode must be 'drop' or 'salt', got {cap_mode!r}")
+    buckets = [
+        F.md5(F.concat_ws("|", *[
+            F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)
+        ]))
+        for b in range(bands)
+    ]
+    rows = _band_rows(sigs, id_col, buckets)
     # plain distinct here (r6): minhash-band candidates REPEAT across
     # bands (that is what the distinct removes), so map-side partial
     # aggregation genuinely reduces — the repartition-aligned
     # _distinct_pairs shape only wins on ~unique pair streams
     # (simhash bands, jaccard co-shingles)
-    return (
-        a.join(
-            b_,
-            join_keys & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return _capped_self_join(
+        rows, id_col, ["band", "bucket"], max_bucket_size, salt=cap_mode == "salt"
+    ).distinct()
 
 
 #: default hot-shingle document-frequency cap for the standalone exact
@@ -340,20 +379,7 @@ def ngram_jaccard_pairs(
             (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")),
         ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    ca = counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn(
-            "jaccard_milli",
-            F.round(
-                1000 * F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            ).cast("int"),
-        )
-        .filter(F.col("jaccard_milli") >= int(threshold * 1000))
-        .select("id_a", "id_b", "jaccard_milli")
-    )
+    return _jaccard_milli(inter, counts, threshold)
 
 
 def _bit_majority_sums(docs: DataFrame, text_col: str, id_col: str, bits: int) -> DataFrame:
@@ -480,13 +506,12 @@ def simhash_band_pairs(
     bits: int = 64,
     n_bands: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    cap_mode: str = "drop",
 ) -> DataFrame:
     """Near-dup candidates by banded Hamming grouping over a banded
     SimHash.
 
     Docs sharing ANY band collide in an equi-self-join on
-    (band_idx, band_val) — never all-pairs. By pigeonhole, every pair
+    (band, band value) — never all-pairs. By pigeonhole, every pair
     with Hamming distance <= n_bands-1 shares at least one band, so
     max_hamming <= n_bands-1 gives a COMPLETE result; larger
     thresholds are best-effort recall (standard banding trade-off).
@@ -504,31 +529,9 @@ def simhash_band_pairs(
     sigs = simhash_bands(docs, text_col, id_col, bits, n_bands).localCheckpoint(
         eager=False
     )
-    entries = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_idx"), F.col(f"band_{b}").alias("band_val"))
-            for b in range(n_bands)
-        ]
-    )
-    exploded = sigs.select(
-        F.col(id_col), F.explode(entries).alias("e")
-    ).select(id_col, "e.band_idx", "e.band_val")
-    exploded = cap_hot_groups(
-        exploded, ["band_idx", "band_val"], max_bucket_size,
-        mode=cap_mode, salt_key=id_col,
-    )
-    join_keys = (F.col("a.band_idx") == F.col("b.band_idx")) & (
-        F.col("a.band_val") == F.col("b.band_val")
-    )
-    if cap_mode == "salt" and max_bucket_size is not None:
-        join_keys = join_keys & (F.col("a._salt") == F.col("b._salt"))
-    a, b_ = exploded.alias("a"), exploded.alias("b")
+    rows = _band_rows(sigs, id_col, [F.col(f"band_{b}") for b in range(n_bands)])
     cands = _distinct_pairs(
-        a.join(
-            b_,
-            join_keys & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        _capped_self_join(rows, id_col, ["band", "bucket"], max_bucket_size)
     )
     sa = sigs.select(
         F.col(id_col).alias("id_a"),
@@ -599,20 +602,7 @@ def lsh_verified_neardups(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    ca = counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn(
-            "jaccard_milli",
-            F.round(
-                1000 * F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            ).cast("int"),
-        )
-        .filter(F.col("jaccard_milli") >= int(threshold * 1000))
-        .select("id_a", "id_b", "jaccard_milli")
-    )
+    return _jaccard_milli(inter, counts, threshold)
 
 
 def _is_integral_id(docs: DataFrame, id_col: str) -> bool:
@@ -960,11 +950,9 @@ def shared_passage_pairs(
     Output: (id_a, id_b, n_shared long).
     """
     sh = exploded_shingles(docs, text_col, id_col, shingle_n)
-    sh = cap_hot_groups(sh, ["sh"], max_df)
-    a, b = sh.alias("a"), sh.alias("b")
     return (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        _capped_self_join(sh, "id", ["sh"], max_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

@@ -3,11 +3,12 @@
 The reference recovers checkpoint state by grepping '[timer]' lines
 out of Parsl stdout logs (convert.py:144-182, timer.py:132-163) and
 re-globbing inputs against that set. Here lineage is first-class data:
-one row per committed bucket with input/ok/failure counts and byte
-totals; resume reads the committed bucket ids (at most n_buckets
-ints) to the driver and filters the input scan against that set, so
-at 10^12-turn scale whole buckets drop out before any payload bytes
-move, with no join.
+one row per committed bucket with input/ok/failure counts, byte
+totals and the bucket count the run hashed with; resume reads the
+committed bucket ids (at most n_buckets ints) to the driver and
+filters the input scan against that set, so at 10^12-turn scale whole
+buckets drop out before any payload bytes move, with no join. A
+bucket id means nothing under another count, so resume refuses one.
 """
 
 from __future__ import annotations
@@ -18,10 +19,11 @@ from pyspark.sql import functions as F
 from pdfwf_spark.schemas import LINEAGE_SCHEMA
 
 
-def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
+def lineage_rows(extracted: DataFrame, run_id: str, n_buckets: int) -> DataFrame:
     """Aggregate per-bucket lineage from the full (all-status)
-    extraction output. Map-side partial aggregation applies (one long
-    column set, narrow groupBy on the already-colocated bucket key)."""
+    extraction output, hashed into `n_buckets` buckets. Map-side
+    partial aggregation applies (one long column set, narrow groupBy
+    on the already-colocated bucket key)."""
     return (
         extracted.groupBy("bucket")
         .agg(
@@ -50,6 +52,7 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
             "extract_ms",
             "init_ms",
             F.current_timestamp().alias("committed_at"),
+            F.lit(n_buckets).cast("int").alias("n_buckets"),
         )
     )
 
@@ -79,15 +82,33 @@ def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
     return read_or_empty(spark, lineage_path, LINEAGE_SCHEMA)
 
 
-def committed_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+def check_bucket_count(recorded: set, n_buckets: int) -> None:
+    """Raise ValueError when committed lineage was hashed with a bucket
+    count other than `n_buckets`: its bucket ids name other
+    conversations, so skipping them would drop uncommitted turns and
+    re-extract committed ones. NULL counts come from lineage written
+    before the count was recorded and are trusted, as they always were."""
+    other = sorted(c for c in recorded if c is not None and c != n_buckets)
+    if other:
+        raise ValueError(
+            f"committed lineage was written with n_buckets={other}; this run "
+            f"asks for {n_buckets}. Rerun with the committed count or write "
+            "to a new output directory"
+        )
+
+
+def committed_buckets(spark: SparkSession, lineage_path: str, n_buckets: int) -> set[int]:
     """Resume: the committed bucket ids as a driver set — at most
-    n_buckets ints, read JVM-side (no Python worker). Empty, with no
-    Spark job, when nothing is committed yet. Failures other than a
-    missing path raise, as in read_or_empty."""
+    n_buckets ints, read JVM-side (no Python worker) together with the
+    bucket counts they were hashed under (check_bucket_count). Empty,
+    with no Spark job, when nothing is committed yet. Failures other
+    than a missing path raise, as in read_or_empty."""
     if not _exists(spark, lineage_path):
         return set()
     lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    return {r["bucket"] for r in lineage.select("bucket").distinct().collect()}
+    rows = lineage.select("n_buckets", "bucket").distinct().collect()
+    check_bucket_count({r["n_buckets"] for r in rows}, n_buckets)
+    return {r["bucket"] for r in rows}
 
 
 def _bloom_probe_cols(key, m_bits: int, k: int):

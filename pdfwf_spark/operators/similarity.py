@@ -17,7 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, cap_hot_groups
+from pdfwf_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    _band_rows,
+    _capped_self_join,
+    cap_hot_groups,
+)
 
 
 def _as_double(v: Column) -> Column:
@@ -321,7 +326,6 @@ def bucketed_neardup_pairs(
     n_tables: int = 2,
     seed: int = 42,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    cap_mode: str = "drop",
 ) -> DataFrame:
     """Near-duplicate pairs (cosine >= threshold) among same-bucket
     vectors — the 100 TB path: per-table bucket equi-joins bound the
@@ -335,9 +339,6 @@ def bucketed_neardup_pairs(
     buckets larger than the cap are dropped before the self-join —
     without it one degenerate bucket (e.g. the cell all zero-vectors
     hash into) is quadratic within itself at corpus scale.
-    cap_mode="salt" splits hot buckets into ceil(n/cap) md5
-    sub-buckets instead (bounded work, no recall cliff — see
-    dedup.cap_hot_groups).
     """
     from pdfwf_spark.operators.partitioning import repartition_for_scan
 
@@ -349,33 +350,8 @@ def bucketed_neardup_pairs(
             for t in range(n_tables)
         ],
     )
-    tb = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(t).alias("tbl"), F.col(f"bucket_{t}").alias("bucket"))
-                for t in range(n_tables)
-            ]
-        )
-    ).alias("tb")
-    exploded = base.select("id", tb).select("id", "tb.tbl", "tb.bucket")
-    exploded = cap_hot_groups(
-        exploded, ["tbl", "bucket"], max_bucket_size,
-        mode=cap_mode, salt_key="id",
-    )
-    join_keys = (F.col("a.tbl") == F.col("b.tbl")) & (
-        F.col("a.bucket") == F.col("b.bucket")
-    )
-    if cap_mode == "salt" and max_bucket_size is not None:
-        join_keys = join_keys & (F.col("a._salt") == F.col("b._salt"))
-    a, b_ = exploded.alias("a"), exploded.alias("b")
-    cands = (
-        a.join(
-            b_,
-            join_keys & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    rows = _band_rows(base, "id", [F.col(f"bucket_{t}") for t in range(n_tables)])
+    cands = _capped_self_join(rows, "id", ["band", "bucket"], max_bucket_size).distinct()
     va = base.select(F.col("id").alias("id_a"), F.col("_vec").alias("_va"),
                      F.col("_norm").alias("_na"))
     vb = base.select(F.col("id").alias("id_b"), F.col("_vec").alias("_vb"),

@@ -110,7 +110,10 @@ def run_extraction(
     markdown_compat: bool = False,
 ) -> RunResult:
     """Execute the job against `out_dir` (data at {out_dir}/turns,
-    lineage at {out_dir}/lineage)."""
+    lineage at {out_dir}/lineage). With `resume`, raises ValueError
+    when the committed lineage records a bucket count other than
+    `n_buckets` (lineage.check_bucket_count); lineage written before
+    the count was recorded reads it as NULL and is trusted."""
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
     # run_id becomes a literal partition-directory component that
@@ -127,7 +130,7 @@ def run_extraction(
         # committed bucket ids (<= n_buckets ints) come to the driver and
         # the scan is filtered against them: a Filter keeps the scan's
         # partitioning, so staging reads the same partition count
-        committed = committed_buckets(spark, f"{out_dir}/lineage")
+        committed = committed_buckets(spark, f"{out_dir}/lineage", n_buckets)
         if committed >= set(range(n_buckets)):
             return RunResult(run_id, 0, 0, 0, 0, time.monotonic() - t0)
         if committed:
@@ -155,7 +158,7 @@ def run_extraction(
     write_s = time.monotonic() - t_write
 
     t_lineage = time.monotonic()
-    lin_rows = commit_run(spark, out_dir, run_id)
+    lin_rows = commit_run(spark, out_dir, run_id, n_buckets)
     lineage_s = time.monotonic() - t_lineage
 
     n = sum(r["input_count"] for r in lin_rows)
@@ -186,13 +189,14 @@ _READBACK_SCHEMA = T.StructType(
 )
 
 
-def commit_run(spark: SparkSession, out_dir: str, run_id: str) -> list[dict]:
-    """Commit one run whose data is already under {out_dir}/turns:
-    per-bucket lineage from a read-back of the files it wrote, then
+def commit_run(spark: SparkSession, out_dir: str, run_id: str, n_buckets: int) -> list[dict]:
+    """Commit one run whose data is already under {out_dir}/turns,
+    bucketed into `n_buckets`: per-bucket lineage (which records that
+    count) from a read-back of the files it wrote, then
     the lineage append — the LAST write, whose presence marks the run
     committed for read_output and resume. A run that wrote no rows has
     no bucket to commit and appends nothing. Returns the lineage rows."""
-    lin = lineage_from_written(spark, f"{out_dir}/turns", run_id).toPandas()
+    lin = lineage_from_written(spark, f"{out_dir}/turns", run_id, n_buckets).toPandas()
     # <= n_buckets rows land on the driver; re-wrapping them keeps the
     # lineage append from re-scanning the read-back a second time, and
     # a non-empty pandas frame goes back to the JVM as Arrow batches, so
@@ -202,7 +206,9 @@ def commit_run(spark: SparkSession, out_dir: str, run_id: str) -> list[dict]:
     return lin.to_dict("records")
 
 
-def lineage_from_written(spark: SparkSession, data_path: str, run_id: str) -> DataFrame:
+def lineage_from_written(
+    spark: SparkSession, data_path: str, run_id: str, n_buckets: int
+) -> DataFrame:
     """Per-bucket lineage for one run, derived from the files the run
     just wrote: a partition-pruned (run_id=...) scan reading only the
     narrow lineage-input columns — never a cached copy of the corpus."""
@@ -211,7 +217,7 @@ def lineage_from_written(spark: SparkSession, data_path: str, run_id: str) -> Da
     written = read_or_empty(
         spark, f"{data_path}/run_id={run_id}", _READBACK_SCHEMA
     )
-    return lineage_rows(written, run_id)
+    return lineage_rows(written, run_id, n_buckets)
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -81,5 +81,9 @@ LINEAGE_SCHEMA = T.StructType(
         # nullable so pre-v3 lineage files read as NULL
         T.StructField("init_ms", T.LongType(), True),
         T.StructField("committed_at", T.TimestampType(), False),
+        # v4: the bucket count the run hashed with; bucket ids mean
+        # nothing under another count, so resume refuses a mismatch.
+        # Nullable so pre-v4 lineage files read as NULL (trusted)
+        T.StructField("n_buckets", T.IntegerType(), True),
     ]
 )

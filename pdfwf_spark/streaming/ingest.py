@@ -17,7 +17,8 @@ batch body makes the replay safe twice over:
   is skipped outright (idempotent no-op), so a replay after a fully
   committed attempt appends nothing.
 Lineage append is the LAST write of the batch; its presence marks the
-epoch committed.
+epoch committed. Lineage committed under another bucket count stops
+the query at its first batch, as run_extraction's resume refuses it.
 
 Driver-built frames (the committed run_ids, the per-conv offsets) are
 pandas frames, which reach the JVM as Arrow batches: joining them
@@ -79,7 +80,7 @@ def start_ingest(
 
     import pandas as pd
 
-    from pdfwf_spark.operators.lineage import read_lineage, read_or_empty
+    from pdfwf_spark.operators.lineage import check_bucket_count, read_lineage, read_or_empty
     from pdfwf_spark.pipeline import commit_run, extract_df
     from pdfwf_spark.sinks.table import append_data
 
@@ -96,9 +97,11 @@ def start_ingest(
 
     def _rebuild_cache() -> None:
         lineage = read_lineage(spark, f"{out_dir}/lineage")
-        run_ids = {
-            r["run_id"] for r in lineage.select("run_id").distinct().collect()
-        }
+        rows = lineage.select("run_id", "n_buckets").distinct().collect()
+        # the same refusal as run_extraction's resume: the epoch skip
+        # and the rank offsets trust what lineage committed
+        check_bucket_count({r["n_buckets"] for r in rows}, n_buckets)
+        run_ids = {r["run_id"] for r in rows}
         prior: dict[str, int] = {}
         if run_ids:
             # committed run_ids only: orphans of a crashed attempt
@@ -147,7 +150,7 @@ def start_ingest(
                     .drop("_prior_max")
                 )
             append_data(ranked.withColumn("run_id", F.lit(run_id)), f"{out_dir}/turns")
-            commit_run(spark, out_dir, run_id)
+            commit_run(spark, out_dir, run_id, n_buckets)
         except BaseException:
             cache["ready"] = False  # force rebuild-from-disk next batch
             raise

@@ -20,6 +20,7 @@ from pdfwf_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shared_passage_pairs,
     simhash_band_pairs,
 )
 
@@ -90,6 +91,45 @@ def test_ngram_jaccard_hot_shingle_guard(spark):
     unguarded = ngram_jaccard_pairs(docs, threshold=0.01, max_df=None)
     assert guarded.count() == 0
     assert unguarded.count() == 30 * 29 // 2  # hot shingles pair everyone
+
+
+def test_shared_passage_cap_engages(spark):
+    """A passage shared by more than max_df docs pairs none of them;
+    a passage two docs share still pairs them, and max_df=None pairs
+    everyone through the hot passage."""
+    hot = "click here to accept all cookies and continue reading this page"
+    rows = [(i, f"{hot} article {i} about topic{i} words{i * 3}") for i in range(30)]
+    lifted = "a rare passage lifted word for word from one source"
+    rows += [(1000 + i, f"intro{i} {lifted} outro{i}") for i in range(2)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = lambda df: {(r["id_a"], r["id_b"]) for r in df.collect()}
+    assert pairs(shared_passage_pairs(docs, max_df=10)) == {(1000, 1001)}
+    uncapped = pairs(shared_passage_pairs(docs, max_df=None))
+    assert len(uncapped) == 30 * 29 // 2 + 1 and (1000, 1001) in uncapped
+
+
+def test_dialogue_segment_cap_engages(spark):
+    """A w-turn segment shared by more than max_bucket conversations
+    pairs none of them; a segment two conversations share still pairs
+    them, and a large max_bucket pairs everyone through the hot one."""
+    from pdfwf_spark.operators.context import dialogue_segment_pairs
+
+    script = ["hello", "how can I help", "reset my password"]
+    rows = [
+        (f"c{c:03d}", t, text)
+        for c in range(N_HOT)
+        for t, text in enumerate(script + [f"conv {c} detail", f"conv {c} end"])
+    ]
+    rows += [
+        (f"x{c}", t, text)
+        for c in (1, 2)
+        for t, text in enumerate([f"x{c} start", "rare one", "rare two", "rare three"])
+    ]
+    turns = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    pairs = lambda df: {(r["conv_a"], r["conv_b"]) for r in df.collect()}
+    assert pairs(dialogue_segment_pairs(turns, w=3, max_bucket=CAP)) == {("x1", "x2")}
+    uncapped = pairs(dialogue_segment_pairs(turns, w=3, max_bucket=10 * N_HOT))
+    assert len(uncapped) == N_HOT * (N_HOT - 1) // 2 + 1 and ("x1", "x2") in uncapped
 
 
 def test_bucketed_neardup_cap_engages(spark):

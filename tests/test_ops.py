@@ -596,30 +596,24 @@ def test_exact_surrogate_ids(spark):
 
 
 def test_cap_hot_groups_salt_mode(spark):
-    """Salt mode: groups <= cap keep salt 0; a group of n gets
+    """With a salt_key: groups <= cap keep salt 0; a group of n gets
     ceil(n/cap) sub-buckets; every row is KEPT (no recall cliff) and
     the salt is a deterministic md5 function of the row key."""
     from pdfwf_spark.operators.dedup import cap_hot_groups
 
     rows = [("g1", i) for i in range(10)] + [("g2", i) for i in range(100, 103)]
     df = spark.createDataFrame(rows, "bucket string, doc_id long")
-    out = cap_hot_groups(df, ["bucket"], cap=4, mode="salt", salt_key="doc_id")
+    out = cap_hot_groups(df, ["bucket"], cap=4, salt_key="doc_id")
     pdf = out.toPandas()
     assert len(pdf) == len(rows)  # nothing dropped
     g1 = pdf[pdf.bucket == "g1"]
     assert set(g1._salt) <= set(range(3))  # ceil(10/4) = 3 sub-buckets
     assert (pdf[pdf.bucket == "g2"]._salt == 0).all()
     # determinism: same input -> same salts
-    pdf2 = cap_hot_groups(
-        df, ["bucket"], cap=4, mode="salt", salt_key="doc_id"
-    ).toPandas()
+    pdf2 = cap_hot_groups(df, ["bucket"], cap=4, salt_key="doc_id").toPandas()
     assert sorted(map(tuple, pdf.values.tolist())) == sorted(
         map(tuple, pdf2.values.tolist())
     )
-    with pytest.raises(ValueError, match="salt_key"):
-        cap_hot_groups(df, ["bucket"], cap=4, mode="salt")
-    with pytest.raises(ValueError, match="mode"):
-        cap_hot_groups(df, ["bucket"], cap=4, mode="shrug")
 
 
 def test_lsh_salted_recall_between_drop_and_uncapped(spark):

@@ -112,8 +112,8 @@ def test_lsh_literal_planes_keep_md5_out_of_plan(spark):
 
 
 def test_simhash_band_pairs_equi_join_and_hash_agg(spark):
-    """Band candidates come from an equi-self-join on (band_idx,
-    band_val); the 64 majority sums must be a HashAggregate (fixed-
+    """Band candidates come from an equi-self-join on (band,
+    bucket); the 64 majority sums must be a HashAggregate (fixed-
     width int lanes -> map-side combine), never a cartesian blowup."""
     from pdfwf_spark.operators.dedup import simhash_band_pairs
 
@@ -164,7 +164,7 @@ def test_commit_readback_pruned_no_cache(spark, transcripts, tmp_path):
 
     out = str(tmp_path / "outp")
     res = run_extraction(spark, transcripts, out, n_buckets=8, n_partitions=4)
-    lin = lineage_from_written(spark, f"{out}/turns", res.run_id)
+    lin = lineage_from_written(spark, f"{out}/turns", res.run_id, 8)
     plan = _plan(lin)
     assert "InMemoryTableScan" not in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]

@@ -145,6 +145,24 @@ def test_resume_idempotence(spark, transcripts, tmp_path):
     assert read_output(spark, out).count() == full.count()
 
 
+def test_resume_refuses_other_bucket_count(spark, transcripts, tmp_path):
+    """Committed bucket ids name other conversations under another
+    bucket count: a rerun asking for one raises before it reads or
+    writes a turn, and the committed count still resumes to a complete,
+    duplicate-free output."""
+    out = str(tmp_path / "out")
+    first_half = with_bucket(transcripts, n_buckets=8).filter(F.col("bucket") < 4).drop("bucket")
+    r1 = run_extraction(spark, first_half, out, n_buckets=8, n_partitions=8)
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_extraction(spark, transcripts, out, n_buckets=16, n_partitions=8)
+    r2 = run_extraction(spark, transcripts, out, n_buckets=8, n_partitions=8)
+    assert r1.buckets_processed + r2.buckets_processed == 8
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert {r["n_buckets"] for r in lineage.select("n_buckets").distinct().collect()} == {8}
+    committed = read_output(spark, out)
+    assert committed.count() == committed.select("conv_id", "turn_rank").distinct().count()
+
+
 def test_lineage_counts(spark, transcripts, golden, tmp_path):
     out = str(tmp_path / "out2")
     run_extraction(spark, transcripts, out, n_buckets=8, n_partitions=8)

@@ -4,6 +4,7 @@ foreachBatch pipeline to completion; output matches the batch path."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdfwf_spark.fixtures.gen import gen_transcripts
 from pdfwf_spark.schemas import TRANSCRIPT_SCHEMA
@@ -137,9 +138,11 @@ def test_stream_replayed_epoch_is_noop(spark, tmp_path):
     # pre-commit lineage for epoch 0 under the default prefix (run_ids
     # are per-ATTEMPT: '{prefix}-{epoch}-{uuid8}'; the skip matches on
     # the '{prefix}-{epoch}-' tag)
+    # written without the trailing n_buckets column, as lineage was
+    # before the count was recorded: it reads back NULL and is trusted
     pre = spark.createDataFrame(
         [("stream-0-dead1234", 0, 1, 1, 0, 10, 10, 5, 0, datetime(2025, 1, 1))],
-        LINEAGE_SCHEMA,
+        T.StructType(LINEAGE_SCHEMA.fields[:-1]),
     )
     pre.write.parquet(out + "/lineage")
 
@@ -152,6 +155,35 @@ def test_stream_replayed_epoch_is_noop(spark, tmp_path):
     assert read_lineage(spark, out + "/lineage").count() == 1
     import os
 
+    assert not os.path.exists(out + "/turns")
+
+
+def test_stream_refuses_other_bucket_count(spark, tmp_path):
+    """Lineage committed under another bucket count stops the stream
+    before its epoch skip or any extraction, as run_extraction's
+    resume refuses it."""
+    import os
+    from datetime import datetime
+
+    import pytest
+
+    from pdfwf_spark.schemas import LINEAGE_SCHEMA
+
+    src = str(tmp_path / "src5")
+    rows = [("conv-z", 0, "user", "payload body words", "", datetime(2025, 1, 1))]
+    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.parquet(src)
+    out = str(tmp_path / "out5")
+    spark.createDataFrame(
+        [("batch-run", 0, 1, 1, 0, 10, 10, 5, 0, datetime(2025, 1, 1), 16)],
+        LINEAGE_SCHEMA,
+    ).write.parquet(out + "/lineage")
+
+    q = start_ingest(spark, src, out, str(tmp_path / "ckpt5"), n_buckets=8, n_partitions=4)
+    try:
+        with pytest.raises(Exception, match="n_buckets"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
     assert not os.path.exists(out + "/turns")
 
 

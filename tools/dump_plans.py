@@ -111,7 +111,7 @@ def main() -> None:
 
     out.write(
         "\n## simhash_band_pairs\n\nProperty: candidates come from an\n"
-        "equi-self-join on (band_idx, band_val) — no CartesianProduct,\n"
+        "equi-self-join on (band, bucket) — no CartesianProduct,\n"
         "no BroadcastNestedLoopJoin; the 64 majority sums are one\n"
         "HashAggregate with map-side combine.\n\n```\n"
     )
@@ -124,7 +124,7 @@ def main() -> None:
         "Catalyst does not constant-fold md5 inside higher-order\n"
         "lambdas, so the executor-side variant would pay per-(row x dim\n"
         "x plane x table) md5); the candidate join is an equi-join on\n"
-        "(table, bucket), never all-pairs.\n\n```\n"
+        "(band, bucket) — band is the table index — never all-pairs.\n\n```\n"
     )
     out.write(fmt(bucketed_neardup_pairs(emb, threshold_milli=300, n_planes=4,
                                          n_tables=2)))
