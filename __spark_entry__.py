@@ -24,7 +24,12 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------- helpers
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The one table reader every query uses: an under-split scan is
+    split here (partitioning.repartition_for_scan), so operators take
+    their input's partitioning as given."""
+    from pdfwf_spark.operators.partitioning import repartition_for_scan
+
+    df = repartition_for_scan(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     df.createOrReplaceTempView(name)
     return df
 
@@ -41,7 +46,6 @@ def _media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     import os
 
     from pdfwf_spark.operators import multimodal as mm
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
 
     builders = {
         "fake": mm.make_fake_media_batch,
@@ -55,7 +59,7 @@ def _media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         import pandas as pd
 
-        docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+        docs = _t(spark, sf_dir, "documents")
 
         def build(batches):
             for pdf in batches:
@@ -89,8 +93,12 @@ def _media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
 def _synth_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic transcripts of input_hint shape derived from the
     driver's documents table: payload family cycles by doc_id (html
-    wrap / pdfish wrap / plain), convs of ~8 turns."""
-    docs = _t(spark, sf_dir, "documents")
+    wrap / pdfish wrap / plain), convs of ~8 turns.
+
+    Reads the raw scan, not `_t`: extraction splits its own input
+    (pipeline._stage hashes the turn key), and its partition probe on a
+    frame already split by `_t` would run that exchange as a job."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     body = F.col("text")
     html_payload = F.concat(
         F.lit('<html><head><title>doc</title></head><body><div class="nav">'
@@ -407,10 +415,8 @@ def _q_p6_meta_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 — full 9-key metadata projection (pymupdf.py:83-93) over a
     header-bearing payload synthesized from documents."""
     from pdfwf_spark.operators.functions import project_meta9
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
 
-    # r6: single-row-group input otherwise pins the regex pass to one task
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     payload = F.concat(
         F.lit("Title: doc "), F.col("doc_id").cast("string"), F.lit("\n"),
         F.lit("Authors: author-"), F.pmod(F.col("doc_id"), F.lit(7)).cast("string"),
@@ -426,9 +432,8 @@ def _q_f7_markdown_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7 — markdown_compatible repair pass (nougat_.py:124,245-246)
     on crafted markdown-noisy payloads."""
     from pdfwf_spark.operators.functions import markdown_compatible_col
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
 
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     payload = F.concat(
         F.lit("#Intro "), F.col("doc_id").cast("string"),
         F.lit("\n(1.2) \\[E=mc^2\\]\nsee https://ex.org/d"),
@@ -744,12 +749,11 @@ def _q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality floor -> language filter. One shuffle for the dedup
     groupBy; quality/lang are scan-side codegen'd expressions."""
     from pdfwf_spark.operators.dedup import exact_dedup
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.textstats import with_lang_id, with_quality_score
 
     from pdfwf_spark.operators.functions import eval_once
 
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     keepers = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
     kept = docs.join(keepers, "doc_id", "left_semi")
     scored = with_lang_id(with_quality_score(kept))
@@ -771,8 +775,6 @@ def _q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfwf_spark.operators.textstats import token_count
 
     docs = _t(spark, sf_dir, "documents")
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-    docs = repartition_for_scan(docs)
     return docs.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -784,8 +786,6 @@ def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfwf_spark.operators.textstats import with_quality_score
 
     docs = _t(spark, sf_dir, "documents")
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-    docs = repartition_for_scan(docs)
     return with_quality_score(docs).select(
         "doc_id", "n_tokens", "stopword_milli", "punct_milli", "quality_milli"
     )
@@ -795,8 +795,6 @@ def _q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfwf_spark.operators.textstats import with_lang_id
 
     docs = _t(spark, sf_dir, "documents")
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-    docs = repartition_for_scan(docs)
     return with_lang_id(docs).select("doc_id", "lang_pred")
 
 
@@ -804,8 +802,6 @@ def _q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfwf_spark.operators.textstats import with_fingerprint
 
     docs = _t(spark, sf_dir, "documents")
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-    docs = repartition_for_scan(docs)
     return with_fingerprint(docs).select("doc_id", "fingerprint")
 
 
@@ -1099,7 +1095,6 @@ def _q_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data job actually chains; every stage is individually
     oracled, and this composition is too."""
     from pdfwf_spark.operators.dedup import dup_clusters, lsh_verified_neardups
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.textstats import (
         with_lang_id,
         with_pii_redacted,
@@ -1107,7 +1102,7 @@ def _q_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_repetition_stats,
     )
 
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     pairs = lsh_verified_neardups(docs, threshold=0.01)
     keepers = dup_clusters(docs, pairs).filter(F.col("is_keeper") == 1).select("doc_id")
     kept = docs.join(keepers, "doc_id", "left_semi")
@@ -1257,10 +1252,9 @@ def _q_text_clf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality filter shape): token -> md5-hashed integer weight, doc
     score = mean token weight. Integer arithmetic end to end, so the
     oracle reproduces scores exactly."""
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.textstats import with_hashed_classifier_score
 
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return with_hashed_classifier_score(docs).select("doc_id", "clf_score_milli")
 
 
@@ -1432,10 +1426,8 @@ def _q_text_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfwf_spark.core.normalize import MOJIBAKE_MAP
     from pdfwf_spark.operators.functions import fix_mojibake_col
 
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     sample = " " + " ".join(bad for bad, _ in MOJIBAKE_MAP)
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         fix_mojibake_col(F.concat(F.col("text"), F.lit(sample))).alias("fixed_text"),
@@ -1628,12 +1620,9 @@ def _q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join + exact count confirms — deterministic, so the whole
     two-pass plan oracles as one GROUP BY ... HAVING."""
     from pdfwf_spark.operators.dedup import tokens, word_ngrams
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.sketch import heavy_hitters
 
-    # repartition BEFORE the explode: the operator's own guard would
-    # otherwise round-robin the exploded gram rows instead of the docs
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     toks = F.filter(tokens(F.col("text")), lambda x: x != "")
     grams = docs.select(F.explode(word_ngrams(toks, 2)).alias("ngram"))
     return heavy_hitters(grams, "ngram", min_count=40)
@@ -1669,10 +1658,9 @@ def _q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-category counts). The corpus has no PII, so a deterministic
     contact block is appended per doc — built with the identical
     expression in the DuckDB oracle — making every rule fire."""
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.textstats import with_pii_redacted
 
-    docs = repartition_for_scan(_t(spark, sf_dir, "documents")).select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.col("text"),

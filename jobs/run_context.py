@@ -36,27 +36,23 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--max-tool-milli", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from pdfwf_spark.config import ContextConfig, cli_or_yaml, yaml_mapping
+    from pdfwf_spark.config import ContextConfig, job_picker
 
-    yaml_vals = yaml_mapping(ContextConfig, args.config) if args.config else {}
-
-    def pick(key: str, cli_val, default):
-        return cli_or_yaml(yaml_vals, key, cli_val, default)
-
+    pick = job_picker(ContextConfig, args.config)
     cfg = ContextConfig(
-        input=pick("input", args.input, None)
+        input=pick("input", args.input)
         or ap.error("--input or config 'input' required"),
-        output=pick("output", args.output, None)
+        output=pick("output", args.output)
         or ap.error("--output or config 'output' required"),
-        mode=pick("mode", args.mode, "context"),
-        k=pick("k", args.k, 3),
-        chunk_size=pick("chunk_size", args.chunk_size, None),
-        max_chars_per_turn=pick("max_chars_per_turn", args.max_chars_per_turn, None),
-        response_role=pick("response_role", args.response_role, "assistant"),
-        min_turns=pick("min_turns", args.min_turns, 1),
-        max_violations=pick("max_violations", args.max_violations, None),
-        max_run_len=pick("max_run_len", args.max_run_len, None),
-        max_tool_milli=pick("max_tool_milli", args.max_tool_milli, None),
+        mode=pick("mode", args.mode),
+        k=pick("k", args.k),
+        chunk_size=pick("chunk_size", args.chunk_size),
+        max_chars_per_turn=pick("max_chars_per_turn", args.max_chars_per_turn),
+        response_role=pick("response_role", args.response_role),
+        min_turns=pick("min_turns", args.min_turns),
+        max_violations=pick("max_violations", args.max_violations),
+        max_run_len=pick("max_run_len", args.max_run_len),
+        max_tool_milli=pick("max_tool_milli", args.max_tool_milli),
     )
 
     from pdfwf_spark.config import read_input

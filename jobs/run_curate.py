@@ -44,42 +44,37 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--assign-splits", action="store_true")
     args = ap.parse_args(argv)
 
-    from pdfwf_spark.config import CurateConfig, cli_or_yaml, yaml_mapping
+    from pdfwf_spark.config import CurateConfig, job_picker
 
     # YAML loaded as a MAPPING (not constructed): a YAML holding only
     # stage knobs + --input/--output flags is valid — required fields
     # and validation apply to the post-merge config only
-    yaml_vals = yaml_mapping(CurateConfig, args.config) if args.config else {}
-
-    def pick(key: str, cli_val, default):
-        return cli_or_yaml(yaml_vals, key, cli_val, default)
-
-    langs = args.langs.split(",") if args.langs else pick("langs", None, None)
+    pick = job_picker(CurateConfig, args.config)
     cfg = CurateConfig(
-        input=pick("input", args.input, None)
+        input=pick("input", args.input)
         or ap.error("--input or config 'input' required"),
-        output=pick("output", args.output, None)
+        output=pick("output", args.output)
         or ap.error("--output or config 'output' required"),
-        id_col=pick("id_col", args.id_col, "doc_id"),
-        text_col=pick("text_col", args.text_col, "text"),
+        id_col=pick("id_col", args.id_col),
+        text_col=pick("text_col", args.text_col),
         near_dup_threshold=(
             None if args.no_dedup
-            else pick("near_dup_threshold", args.near_dup_threshold, 0.05)
+            else pick("near_dup_threshold", args.near_dup_threshold)
         ),
         top2gram_max=(
             None if args.no_repetition_filter
-            else pick("top2gram_max", args.top2gram_max, 150)
+            else pick("top2gram_max", args.top2gram_max)
         ),
-        quality_min=pick("quality_min", args.quality_min, None),
-        langs=langs,
-        redact_pii=(not args.no_pii) and yaml_vals.get("redact_pii", True),
-        keeper_policy=pick("keeper_policy", args.keeper_policy, "min_id"),
+        quality_min=pick("quality_min", args.quality_min),
+        langs=args.langs.split(",") if args.langs else pick("langs", None),
+        redact_pii=pick("redact_pii", None) and not args.no_pii,
+        keeper_policy=pick("keeper_policy", args.keeper_policy),
         blocked_domains=(
             args.blocked_domains.split(",") if args.blocked_domains
-            else pick("blocked_domains", None, None)
+            else pick("blocked_domains", None)
         ),
-        max_tokens=pick("max_tokens", args.max_tokens, None),
-        assign_splits=args.assign_splits or yaml_vals.get("assign_splits", False),
+        max_tokens=pick("max_tokens", args.max_tokens),
+        assign_splits=pick("assign_splits", args.assign_splits),
     )
 
     from pdfwf_spark.config import read_input

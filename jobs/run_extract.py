@@ -40,7 +40,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--input", default=None, help="transcripts table/path")
     ap.add_argument("--output", default=None, help="output warehouse dir")
     ap.add_argument("--buckets", type=int, default=None,
-                    help="commit/resume buckets (conv-hash; default 4096)")
+                    help="commit/resume buckets (conv-hash)")
     ap.add_argument("--partitions", type=int, default=None,
                     help="extract-stage partitions; an input scan with "
                          "fewer is hash-repartitioned on the turn key")
@@ -56,27 +56,23 @@ def main(argv: list[str] | None = None) -> None:
                          "to exactly N rows per file (balance.py analog)")
     args = ap.parse_args(argv)
 
-    from pdfwf_spark.config import ExtractConfig, cli_or_yaml, yaml_mapping
+    from pdfwf_spark.config import ExtractConfig, job_picker
 
     # YAML first, explicit CLI flags on top (pydantic-settings
     # precedence: reference utils.py:30-89). Loaded as a MAPPING, not
     # constructed: a YAML of only tuning knobs + --input/--output
     # flags is valid, so required-field validation happens post-merge.
-    yaml_vals = yaml_mapping(ExtractConfig, args.config) if args.config else {}
-
-    def pick(key: str, cli_val, default):
-        return cli_or_yaml(yaml_vals, key, cli_val, default)
-
+    pick = job_picker(ExtractConfig, args.config)
     cfg = ExtractConfig(
-        input=pick("input", args.input, None) or ap.error("--input or config 'input' required"),
-        output=pick("output", args.output, None) or ap.error("--output or config 'output' required"),
-        buckets=pick("buckets", args.buckets, 4096),
-        partitions=pick("partitions", args.partitions, None),
-        limit=pick("limit", args.limit, None),
-        run_id=pick("run_id", args.run_id, None),
-        resume=yaml_vals.get("resume", True) and not args.no_resume,
-        markdown_compat=pick("markdown_compat", args.markdown_compat, False),
-        rebalance_rows=pick("rebalance_rows", args.rebalance_rows, None),
+        input=pick("input", args.input) or ap.error("--input or config 'input' required"),
+        output=pick("output", args.output) or ap.error("--output or config 'output' required"),
+        buckets=pick("buckets", args.buckets),
+        partitions=pick("partitions", args.partitions),
+        limit=pick("limit", args.limit),
+        run_id=pick("run_id", args.run_id),
+        resume=pick("resume", None) and not args.no_resume,
+        markdown_compat=pick("markdown_compat", args.markdown_compat),
+        rebalance_rows=pick("rebalance_rows", args.rebalance_rows),
     )
 
     from pdfwf_spark.pipeline import run_extraction

@@ -31,23 +31,19 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--text-col", default=None)
     args = ap.parse_args(argv)
 
-    from pdfwf_spark.config import PackConfig, cli_or_yaml, yaml_mapping
+    from pdfwf_spark.config import PackConfig, job_picker
 
-    yaml_vals = yaml_mapping(PackConfig, args.config) if args.config else {}
-
-    def pick(key: str, cli_val, default):
-        return cli_or_yaml(yaml_vals, key, cli_val, default)
-
+    pick = job_picker(PackConfig, args.config)
     cfg = PackConfig(
-        input=pick("input", args.input, None)
+        input=pick("input", args.input)
         or ap.error("--input or config 'input' required"),
-        output=pick("output", args.output, None)
+        output=pick("output", args.output)
         or ap.error("--output or config 'output' required"),
-        budget=pick("budget", args.budget, 2048),
-        discipline=pick("discipline", args.discipline, "concat"),
-        n_buckets=pick("n_buckets", args.n_buckets, 8),
-        id_col=pick("id_col", args.id_col, "doc_id"),
-        text_col=pick("text_col", args.text_col, "text"),
+        budget=pick("budget", args.budget),
+        discipline=pick("discipline", args.discipline),
+        n_buckets=pick("n_buckets", args.n_buckets),
+        id_col=pick("id_col", args.id_col),
+        text_col=pick("text_col", args.text_col),
     )
 
     from pyspark.sql import functions as F

@@ -38,29 +38,26 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--salt", default=None)
     args = ap.parse_args(argv)
 
-    from pdfwf_spark.config import SelectConfig, cli_or_yaml, yaml_mapping
+    from pdfwf_spark.config import SelectConfig, job_picker
 
-    yaml_vals = yaml_mapping(SelectConfig, args.config) if args.config else {}
-
-    def pick(key: str, cli_val, default):
-        return cli_or_yaml(yaml_vals, key, cli_val, default)
-
+    pick = job_picker(SelectConfig, args.config)
     cfg = SelectConfig(
-        input=pick("input", args.input, None)
+        input=pick("input", args.input)
         or ap.error("--input or config 'input' required"),
-        output=pick("output", args.output, None)
+        output=pick("output", args.output)
         or ap.error("--output or config 'output' required"),
-        target=pick("target", args.target, None),
-        target_filter=pick("target_filter", args.target_filter, None),
-        mode=pick("mode", args.mode, "select"),
-        q=pick("q", args.q, 0.9),
-        n_buckets=pick("n_buckets", args.n_buckets, 8192),
-        id_col=pick("id_col", args.id_col, "doc_id"),
-        text_col=pick("text_col", args.text_col, "text"),
-        salt=pick("salt", args.salt, "dsir"),
+        target=pick("target", args.target),
+        target_filter=pick("target_filter", args.target_filter),
+        mode=pick("mode", args.mode),
+        q=pick("q", args.q),
+        n_buckets=pick("n_buckets", args.n_buckets),
+        id_col=pick("id_col", args.id_col),
+        text_col=pick("text_col", args.text_col),
+        salt=pick("salt", args.salt),
     )
 
     from pdfwf_spark.config import read_input
+    from pdfwf_spark.operators.partitioning import repartition_for_scan
     from pdfwf_spark.operators.selection import (
         dsir_fit, dsir_scores, dsir_select,
     )
@@ -68,9 +65,9 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = build_session(app_name="pdfwf_spark_select")
 
-    pool = read_input(spark, cfg.input)
+    pool = repartition_for_scan(read_input(spark, cfg.input))
     target = (
-        read_input(spark, cfg.target)
+        repartition_for_scan(read_input(spark, cfg.target))
         if cfg.target is not None
         else pool.filter(cfg.target_filter)
     )

@@ -21,7 +21,7 @@ gives).
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, fields
+from dataclasses import MISSING, asdict, dataclass, fields
 from pathlib import Path
 
 
@@ -155,7 +155,19 @@ def cli_or_yaml(yaml_vals: dict, key: str, cli_val, default):
     not be masked by an unset flag)."""
     if cli_val is not None and cli_val is not False:
         return cli_val
-    return yaml_vals.get(key, default) if key in yaml_vals else default
+    return yaml_vals.get(key, default)
+
+
+def job_picker(cls, config_path: str | None):
+    """The job CLIs' `pick(key, cli_val)`: the explicit CLI value, else
+    the YAML value from `config_path`, else the dataclass default of
+    `cls` (None for a required field). Defaults live only in the
+    dataclass."""
+    yaml_vals = yaml_mapping(cls, config_path) if config_path else {}
+    defaults = {
+        f.name: None if f.default is MISSING else f.default for f in fields(cls)
+    }
+    return lambda key, cli_val: cli_or_yaml(yaml_vals, key, cli_val, defaults[key])
 
 
 def read_input(spark, path_or_table: str):

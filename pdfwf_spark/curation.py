@@ -44,6 +44,10 @@ def curate(
     enabled stage's surviving-row count is recorded (one count action
     per stage — leave off in production and derive counts from the
     written output instead).
+
+    An under-split input is split once, here
+    (partitioning.repartition_for_scan); the stage operators take the
+    partitioning they are given.
     """
     from pdfwf_spark.operators.dedup import (
         dup_clusters,

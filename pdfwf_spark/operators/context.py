@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, _capped_self_join
+
 DEFAULT_ENTRY_SEP = "\n"
 DEFAULT_ROLE_SEP = ": "
 
@@ -308,7 +310,7 @@ def dialogue_segment_pairs(
     df: DataFrame,
     w: int = 3,
     min_shared: int = 1,
-    max_bucket: int | None = None,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
     conv_col: str = "conv_id",
     order_cols: tuple[str, ...] = ("turn_idx", "ts"),
     text_col: str = "text",
@@ -325,13 +327,10 @@ def dialogue_segment_pairs(
     signatures are capped (dedup.cap_hot_groups — the same guard as
     every banded self-join), and the pair join is a plain equi-join
     on the signature. Work: O(turns) + O(sum of bucket^2) with
-    bucket <= max_bucket."""
+    bucket <= max_bucket (None disables the cap, as on every other
+    capped operator)."""
     if w < 2:
         raise ValueError(f"w must be >= 2, got {w}")
-    from pdfwf_spark.operators.dedup import DEFAULT_MAX_BUCKET, _capped_self_join
-
-    if max_bucket is None:
-        max_bucket = DEFAULT_MAX_BUCKET
     order = [F.col(c) for c in order_cols if c in df.columns]
     win = Window.partitionBy(conv_col).orderBy(*order)
     parts = [F.col(text_col)] + [

@@ -239,9 +239,7 @@ def exploded_shingles(
     docs: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
     """(id, sh) rows of distinct word n-gram shingles per doc."""
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    return repartition_for_scan(docs).select(
+    return docs.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(tokens(F.col(text_col)), n)).alias("sh"),
     )
@@ -387,9 +385,7 @@ def _bit_majority_sums(docs: DataFrame, text_col: str, id_col: str, bits: int) -
     token's bit p = bit p of md5(token)'s hex digits. One explode ->
     groupBy shuffle; all `bits` sums are fixed-width int lanes, so the
     aggregate stays a map-side-combining HashAggregate."""
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    tok = repartition_for_scan(docs).select(
+    tok = docs.select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
     ).filter(F.col("tok") != "")
     # decode the md5 hex ONCE per token into 15-digit integer halves

@@ -11,6 +11,14 @@ commit/resume unit. Per-conv grouping is restored only in the (cheap)
 ordering window afterwards — mirroring how the reference parallelizes
 at page granularity and regroups by file_id
 (tensor_utils.py:2159-2291).
+
+The scan-split rule lives in one place: `repartition_for_scan`, called
+only where a table is read (pipeline._stage, curation.curate, the
+query reader and the job readers), never inside an operator. Asking a
+frame for its partition count goes through `df.rdd`, which on a frame
+that already holds an exchange runs that exchange (under AQE, every
+upstream shuffle stage as its own job) just to answer; on a frame
+fresh from a read it is free.
 """
 
 from __future__ import annotations
@@ -23,20 +31,26 @@ from pyspark.sql import functions as F
 DEFAULT_BUCKETS = 64
 
 
-def repartition_for_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """Guarantee scan-side parallelism for compute-heavy narrow
-    stages (shingling, hashing, UDFs).
+def repartition_for_scan(
+    df: DataFrame, keys: Sequence[str] = (), n_partitions: int | None = None
+) -> DataFrame:
+    """The one under-split rule: a scan with fewer partitions than the
+    target (`n_partitions`, default defaultParallelism) is repartitioned
+    to the target — round-robin when `keys` is empty, hashed on `keys`
+    otherwise; a well-split scan is returned unchanged.
 
     A single small parquet file scans as ONE partition, so everything
     upstream of the first exchange runs on one core (observed: a 2M-
     md5 partial aggregate pinned to a single thread). At cluster scale
-    inputs already have many splits and this is a no-op; locally it
-    fans the scan out to defaultParallelism.
+    inputs already have many splits and this is a no-op.
+
+    Call it only on a frame fresh from a read: the partition count
+    comes from `df.rdd`, and on a frame with an exchange that runs the
+    exchange.
     """
-    spark = df.sparkSession
-    target = min_parallelism or spark.sparkContext.defaultParallelism
+    target = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
+        return df.repartition(target, *keys)
     return df
 
 

@@ -75,26 +75,18 @@ def _gram_rows(
     document, WITH multiplicity — the DSIR feature extractor. The
     md5-first-8-hex-chars -> [0, 2^32) idiom is the same one
     sampling._hash_bucket pins, so DuckDB reproduces bucket ids
-    exactly. Two deliberate plan choices vs hashing inside an array
-    `transform` and exploding the result (r6 optimization, guide
-    §2.5/§4.1):
-
-    - the scan is repartitioned first (exploded_shingles precedent): a
-      single-row-group parquet file otherwise pins the whole md5 pass
-      to ONE task;
-    - the md5 bucket is computed AFTER the explode as a plain row
-      expression (whole-stage codegen) instead of inside an array
-      `transform` lambda (interpreted per element).
+    exactly. The md5 bucket is computed AFTER the explode as a plain
+    row expression (whole-stage codegen) instead of inside an array
+    `transform` lambda (interpreted per element; r6 optimization,
+    guide §4.1).
 
     explode_outer keeps gram-less docs with a NULL bucket (null gram ->
     null concat -> null md5).
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     grams = F.concat(toks, word_ngrams(toks, 2))
     ex = (F.explode_outer if outer else F.explode)(grams).alias("_gram")
-    rows = repartition_for_scan(docs).select(*cols, ex)
+    rows = docs.select(*cols, ex)
     # re-reference carried columns BY NAME: `cols` may hold aliased
     # expressions over input columns that no longer exist post-select
     carried = [F.col(c) for c in rows.columns[:-1]]

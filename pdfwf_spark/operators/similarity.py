@@ -65,9 +65,7 @@ def cosine_topk(
     Output: q_id, n_id, rank, cos_milli. Ties after rounding break on
     n_id ascending so the result is total-order deterministic.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    corpus = with_unit_norm(repartition_for_scan(emb), vec_col).select(
+    corpus = with_unit_norm(emb, vec_col).select(
         F.col(id_col).alias("n_id"), "_vec", F.col("_norm").alias("_n_norm")
     )
     qs = with_unit_norm(queries, vec_col).select(
@@ -210,11 +208,7 @@ def ivf_assign(
     Plan shape: centroid side is tiny -> broadcast nested-loop score +
     one map-side-combining min_by per vector. No shuffle of the corpus.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    # r6: the per-vector argmin is the whole cost; fan the scan out
-    # (single-row-group inputs otherwise run it on one task)
-    base = with_unit_norm(repartition_for_scan(emb), vec_col).select(
+    base = with_unit_norm(emb, vec_col).select(
         F.col(id_col).alias("id"), "_vec", "_norm"
     )
     cents = base.filter(F.col("id") < n_centroids).select(
@@ -340,10 +334,8 @@ def bucketed_neardup_pairs(
     without it one degenerate bucket (e.g. the cell all zero-vectors
     hash into) is quadratic within itself at corpus scale.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     dim = _probe_dim(emb, vec_col)
-    base = with_unit_norm(repartition_for_scan(emb), vec_col).select(
+    base = with_unit_norm(emb, vec_col).select(
         F.col(id_col).alias("id"), "_vec", "_norm",
         *[
             hyperplane_bucket(vec_col, n_planes, seed, t, dim).alias(f"bucket_{t}")
@@ -430,16 +422,11 @@ def kmeans_cluster(
     k*dim at the cost of one id-keyed argmin shuffle per iteration
     (map-side combining, so it moves one row per vector).
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     if k <= 0 or iters < 0:
         raise ValueError(f"need k > 0, iters >= 0; got k={k}, iters={iters}")
     if assign not in ("literal", "broadcast"):
         raise ValueError(f"assign must be 'literal' or 'broadcast', got {assign!r}")
-    # repartition_for_scan: a single-row-group parquet input otherwise
-    # pins every fit pass to ONE task (r6; integer math is partition-
-    # order-independent, so the result is unchanged)
-    q = repartition_for_scan(emb).select(
+    q = emb.select(
         F.col(id_col),
         F.transform(
             F.col(vec_col), lambda x: F.round(1000 * x.cast("double")).cast("long")
@@ -665,8 +652,6 @@ def semdedup_pairs(
     granularity only (checkpointed path sets, convert.py:249-257);
     semantic near-dup is beyond-parity.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     # ONE checkpointed base row per vector: id, double vector, norm,
     # and the quantized _vm the assignment argmin reads. The fit runs
     # over this base; the final cell assignment is then an INLINE
@@ -674,7 +659,7 @@ def semdedup_pairs(
     # join, no second scan (r6; previously: fit joined q back per
     # iter, then the final assignment joined with_unit_norm(emb) by
     # id — two extra shuffles of the corpus).
-    base = with_unit_norm(repartition_for_scan(emb), vec_col).select(
+    base = with_unit_norm(emb, vec_col).select(
         F.col(id_col).alias("id"), "_vec", "_norm",
         F.transform(
             F.col(vec_col), lambda x: F.round(1000 * x.cast("double")).cast("long")

@@ -266,14 +266,8 @@ def heavy_hitters(
     collected CSVs (examples/strong_scaling.ipynb cell 0) - a driver-
     side plan that cannot exist at 10^12 rows.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     if min_count <= 0:
         raise ValueError(f"min_count must be positive, got {min_count}")
-    # three passes (auto-capacity count, MG partials, exact confirm)
-    # read this input; a single-row-group parquet source would pin all
-    # of them to one task (r6, guide §2.5 — repartition after the read)
-    df = repartition_for_scan(df)
     if capacity is None:
         n_rows = df.count()
         capacity = max(1, -(-n_rows // min_count))
@@ -321,14 +315,8 @@ def hll_register_state(
     split — the everyday shape). Output gains the group columns;
     shuffle is n_registers rows per (map task, group).
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     if n_registers < 2 or n_registers & (n_registers - 1):
         raise ValueError(f"n_registers must be a power of two >= 2, got {n_registers}")
-    # the md5 pass is the whole per-row cost; guarantee it fans out on
-    # single-row-group inputs (r6, guide §2.5 — max() is partition-
-    # order-independent, result unchanged)
-    df = repartition_for_scan(df)
     reg_bits = n_registers.bit_length() - 1
     w_bits = HLL_HASH_BITS - reg_bits
     u = F.conv(

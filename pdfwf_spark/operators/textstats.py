@@ -162,8 +162,6 @@ def with_repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     two doc-keyed HashAggregates that combine map-side; at 100 TB it
     is one shuffle of (id, gram, count) partials, never of raw text.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
     lines = F.filter(F.split(F.col(text_col), "\n"), lambda x: x != "")
     n_lines = F.size(lines)
     distinct_lines = F.array_distinct(lines)
@@ -176,7 +174,7 @@ def with_repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     safe_lines = F.greatest(n_lines, F.lit(1))
     safe_chars = F.greatest(line_chars, F.lit(1))
 
-    per_row = repartition_for_scan(docs).select(
+    per_row = docs.select(
         F.col("doc_id"),
         F.col(text_col),
         n_lines.alias("n_lines"),
@@ -310,9 +308,7 @@ def domain_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Output: (domain, n_urls, n_docs) — total URL occurrences and
     distinct docs linking to the domain.
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    urls = repartition_for_scan(docs).select(
+    urls = docs.select(
         F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(F.col(text_col), F.lit(URL_PATTERN), 0)
@@ -346,10 +342,9 @@ def top_ngrams(
     the result set is deterministic.
     """
     from pdfwf_spark.operators.dedup import tokens, word_ngrams
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
 
     toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
-    grams = repartition_for_scan(docs).select(
+    grams = docs.select(
         F.explode(word_ngrams(toks, n)).alias("ngram")
     )
     return (
@@ -531,9 +526,7 @@ def canonical_url_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Output: (canonical_url, n_urls, n_docs).
     """
-    from pdfwf_spark.operators.partitioning import repartition_for_scan
-
-    urls = repartition_for_scan(docs).select(
+    urls = docs.select(
         F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(F.col(text_col), F.lit(URL_PATTERN), 0)

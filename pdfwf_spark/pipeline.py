@@ -41,7 +41,11 @@ from pdfwf_spark.operators.extract import extract_turns
 from pdfwf_spark.operators.lineage import committed_buckets, lineage_rows, read_lineage
 from pdfwf_spark.schemas import LINEAGE_SCHEMA
 from pdfwf_spark.operators.ordering import with_turn_rank
-from pdfwf_spark.operators.partitioning import DEFAULT_BUCKETS, with_bucket
+from pdfwf_spark.operators.partitioning import (
+    DEFAULT_BUCKETS,
+    repartition_for_scan,
+    with_bucket,
+)
 from pdfwf_spark.sinks.table import append_data, append_lineage
 
 
@@ -63,7 +67,9 @@ class RunResult:
 def _stage(transcripts: DataFrame, n_buckets: int, n_partitions: int | None) -> DataFrame:
     """The one staging rule: bucket every turn; hash-exchange on the
     turn key (conv_id, turn_idx) only when the scan has fewer
-    partitions than the target (default: defaultParallelism).
+    partitions than the target (default: defaultParallelism) — the
+    scan-split rule (partitioning.repartition_for_scan) with the turn
+    key.
 
     A well-split parquet/Iceberg scan already spreads turns across
     tasks and extraction is per-row, so payloads never shuffle. An
@@ -71,11 +77,9 @@ def _stage(transcripts: DataFrame, n_buckets: int, n_partitions: int | None) -> 
     conversation; the ordering window regroups by conv_id afterwards.
     Not a round-robin repartition: its retry-determinism comes from a
     per-partition sort, which would sort raw payloads."""
-    target = n_partitions or transcripts.sparkSession.sparkContext.defaultParallelism
-    staged = with_bucket(transcripts, n_buckets)
-    if transcripts.rdd.getNumPartitions() < target:
-        staged = staged.repartition(target, "conv_id", "turn_idx")
-    return staged
+    return repartition_for_scan(
+        with_bucket(transcripts, n_buckets), ("conv_id", "turn_idx"), n_partitions
+    )
 
 
 def extract_df(

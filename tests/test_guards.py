@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdfwf_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
     cap_hot_groups,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -130,6 +131,14 @@ def test_dialogue_segment_cap_engages(spark):
     assert pairs(dialogue_segment_pairs(turns, w=3, max_bucket=CAP)) == {("x1", "x2")}
     uncapped = pairs(dialogue_segment_pairs(turns, w=3, max_bucket=10 * N_HOT))
     assert len(uncapped) == N_HOT * (N_HOT - 1) // 2 + 1 and ("x1", "x2") in uncapped
+    # None turns the cap off, as on every other capped operator: a
+    # segment shared by more than the default cap still pairs everyone
+    n = DEFAULT_MAX_BUCKET + 1
+    many = spark.createDataFrame(
+        [(f"c{c:04d}", t, text) for c in range(n) for t, text in enumerate(script)],
+        "conv_id string, turn_idx int, text string",
+    )
+    assert dialogue_segment_pairs(many, w=3, max_bucket=None).count() == n * (n - 1) // 2
 
 
 def test_bucketed_neardup_cap_engages(spark):

@@ -222,6 +222,39 @@ def test_repetition_line_stats_need_no_shuffle(spark):
     assert n_ex == 3, plan
 
 
+def test_operators_build_without_running_jobs(spark):
+    """Building an operator over a frame that already holds an exchange
+    runs nothing: no operator asks its input for a partition count
+    (`df.rdd` on such a frame runs the exchange under AQE). The scan
+    split happens once, where the table is read."""
+    from pdfwf_spark.operators import dedup, sketch, textstats
+
+    def docs():
+        # a fresh frame per build: Dataset.rdd is cached per object
+        return spark.range(64).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("see https://ex.org/p a b a b "), F.col("id").cast("string")).alias("text"),
+        ).repartition(4)
+
+    sc = spark.sparkContext
+    builders = {
+        "lsh_verified_neardups": lambda d: dedup.lsh_verified_neardups(d, threshold=0.5),
+        "with_repetition_stats": textstats.with_repetition_stats,
+        "domain_counts": textstats.domain_counts,
+        "top_ngrams": textstats.top_ngrams,
+        "hll_register_state": lambda d: sketch.hll_register_state(d, "doc_id"),
+    }
+    jobs = {}
+    for name, build in builders.items():
+        sc.setJobGroup(f"build-only-{name}", name)
+        try:
+            build(docs())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"build-only-{name}"))
+    assert jobs == dict.fromkeys(builders, 0)
+
+
 def test_pack_concat_single_exchange(spark):
     """Packing assignment = one hash exchange on the pack bucket (the
     window's requirement); no extra shuffle, no global sort."""

@@ -88,3 +88,22 @@ def test_allowlist_has_no_stale_entries():
     assert len(ALLOWED) <= 5, f"ALLOWED grew to {len(ALLOWED)} entries"
     stale = sorted(set(ALLOWED) - _unreferenced())
     assert not stale, f"now referenced or deleted; drop from ALLOWED: {stale}"
+
+
+def test_operators_never_split_their_input():
+    """The scan-split rule runs where a table is read (pipeline._stage,
+    curation.curate, the query reader, the job readers), never inside an
+    operator: there its `df.rdd` probe runs any exchange upstream."""
+    offenders = []
+    for f in sorted(ROOT.glob("pdfwf_spark/operators/**/*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            called = isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "repartition_for_scan"
+                or getattr(node.func, "attr", None) == "repartition_for_scan"
+            )
+            imported = isinstance(node, ast.ImportFrom) and any(
+                a.name == "repartition_for_scan" for a in node.names
+            )
+            if called or imported:
+                offenders.append(f"{f.relative_to(ROOT).as_posix()}:{node.lineno}")
+    assert not offenders, f"repartition_for_scan used inside operators: {offenders}"
